@@ -1,10 +1,14 @@
 #!/bin/bash
 # Run a graft main class against the compiled classes without sbt
 # (same JVM flags build.sbt passes to forked runs).
-# usage: scripts/run.sh <mainClass> [args...]
+# usage: scripts/run.sh <mainClass> [args...]   (from any directory; the
+# classes are those of the checkout this script lives in)
 set -e
 CLS="$1"; shift
-CP="/root/repo/target/scala-2.13/classes:$(ls /opt/spark/jars/*.jar | tr '\n' ':')"
+ROOT="$(cd "$(dirname "${BASH_SOURCE[0]}")/.." && pwd)"
+# The Spark jars are the ones build.sbt's unmanagedBase names.
+JARS="$(sed -n 's/^unmanagedBase := file("\(.*\)")$/\1/p' "$ROOT/build.sbt")"
+CP="$ROOT/target/scala-2.13/classes:$(ls "$JARS"/*.jar | tr '\n' ':')"
 exec java \
   --add-opens java.base/java.lang=ALL-UNNAMED \
   --add-opens java.base/java.lang.invoke=ALL-UNNAMED \

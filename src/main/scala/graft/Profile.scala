@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 
 /** Dev profiler: time selected queries repeatedly (steady-state vs warmup),
   * optionally print the formatted plan. Usage:
@@ -11,20 +10,7 @@ object Profile {
     val sfDir = args(0)
     val reps = args(1).toInt
     val names = if (args.length > 2) args.drop(2).toSeq else SparkEntry.queries.keys.toSeq.sorted
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // topk_by_score / two-stage argmax are TypedImperativeAggregates:
-      // ObjectHashAggregate abandons its hash map for sort-based agg at
-      // 128 distinct keys per task by default. The aggregation state here
-      // is k-bounded heaps (tiny), so a larger map is strictly safe and
-      // avoids a per-task sort on every argmax query.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "16384")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(16)
     names.foreach { name =>
       val fn = SparkEntry.queries(name)
       val times = (1 to reps).map { _ =>

@@ -377,14 +377,7 @@ object ScaleStress {
     val outJson = if (args.length > 2) args(2) else "BENCH_scale.json"
     val mults = Seq(1, 3, 10)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "16384")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(16)
     spark.range(1000000L).selectExpr("sum(id)").collect()
 
     (mults :+ 30).foreach(k =>

@@ -1,8 +1,10 @@
 package graft.git
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameReader, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.ops.GenStore
 
 /** E1/E2: the end-to-end ETL pipeline (SURVEY §3) — extract all repos in
   * parallel, union, transform once, write the five output tables as parquet.
@@ -26,7 +28,13 @@ object Pipeline {
       /** Frees the pipeline's internal cache once outputs are materialized
         * (each run caches a nonce-distinct plan, so without this, repeated
         * runs in one session accumulate dead cache entries). */
-      release: () => Unit = () => ())
+      release: () => Unit) {
+    /** Every output by table name: the five [[StoreTables]] in publish
+      * order, then the rejects. */
+    def outputs: Seq[(String, DataFrame)] =
+      StoreTables.zip(Seq(commits, authors, fileChanges, tags, repos)) :+
+        ("rejects" -> rejects)
+  }
 
   /** Extract + transform (no write): the five reference tables plus the
     * validation rejects (SURVEY §2.2: the reference's dead validators shipped
@@ -34,9 +42,16 @@ object Pipeline {
     * their error list, instead of silently loaded). */
   def build(spark: SparkSession, repoPaths: Seq[String],
       authorGate: Option[String] = None): Result = {
+    // A path git cannot open is skipped, but said so: its rows would
+    // otherwise vanish from every table without a trace.
+    val readable = repoPaths.flatMap { p =>
+      val info = GitCli.repoInfo(p)
+      if (info.isEmpty) System.err.println(s"[graft] skipping unreadable repo: $p")
+      info
+    }
     // S5 gate: cheap LIMIT-1 probe before full extraction (main.ts:338-343).
-    val infos = repoPaths.flatMap(GitCli.repoInfo)
-      .filter(r => authorGate.forall(p => GitCli.hasCommitsByAuthor(r.path, p)))
+    val infos = readable.filter(r =>
+      authorGate.forall(p => GitCli.hasCommitsByAuthor(r.path, p)))
 
     val flagged = Validate.flagCommits(GitAgg.dedupCommits(
       GitParse.parseLog(GitCli.rawLogs(spark, infos)))).cache()
@@ -63,14 +78,17 @@ object Pipeline {
     * (The reference's one-transaction-per-repo atomicity is subsumed by
     * Spark's output-commit protocol per table — SURVEY §2.6 U6.) */
   def etl(spark: SparkSession, repoPaths: Seq[String], outDir: String,
-      authorGate: Option[String] = None): Result = {
+      authorGate: Option[String] = None): Result =
+    sink(spark, repoPaths, authorGate) { case (t, df) =>
+      df.write.mode("overwrite").parquet(s"$outDir/$t")
+    }
+
+  /** The one-shot sinks' shared loop: build, hand each named output to
+    * `write`, then free the build's cache. */
+  private def sink(spark: SparkSession, repoPaths: Seq[String],
+      authorGate: Option[String])(write: ((String, DataFrame)) => Unit): Result = {
     val r = build(spark, repoPaths, authorGate)
-    r.commits.write.mode("overwrite").parquet(s"$outDir/commits")
-    r.authors.write.mode("overwrite").parquet(s"$outDir/authors")
-    r.fileChanges.write.mode("overwrite").parquet(s"$outDir/file_changes")
-    r.tags.write.mode("overwrite").parquet(s"$outDir/tags")
-    r.repos.write.mode("overwrite").parquet(s"$outDir/repos")
-    r.rejects.write.mode("overwrite").parquet(s"$outDir/rejects")
+    r.outputs.foreach(write)
     r.release()
     r
   }
@@ -86,12 +104,12 @@ object Pipeline {
     * touched set, merged with that table's reference conflict semantics,
     * staged, and published with a MANIFEST COMMIT: data files are immutable
     * and uniquely named, the staged files are moved into the live partition
-    * dirs, and a `_manifest-<seq>` file (one atomic rename) becomes the new
-    * snapshot definition. Readers resolve the manifest ([[readSnapshot]]),
-    * so staging, file moves, and crashes mid-publish are all invisible —
-    * there is no retire→promote instant in which a listing reader can see a
-    * partial table, and nothing relies on atomic DIRECTORY renames (which
-    * object stores don't have; a one-file rename-or-put is the only
+    * dirs, and a `_manifest-<seq>` pointer file (one atomic rename, the
+    * [[GenStore]] pointer-file protocol the index stores also use) becomes
+    * the new snapshot definition. Readers resolve the manifest
+    * ([[readSnapshot]]), so staging, file moves, and crashes mid-publish
+    * are all invisible, and nothing relies on atomic DIRECTORY renames
+    * (which object stores don't have; a one-file rename-or-put is the only
     * atomicity this needs). A publish that dies before its manifest commit
     * leaves only unreferenced files; the next run deletes everything the
     * committed manifest doesn't reference and proceeds. Untouched repos'
@@ -109,11 +127,12 @@ object Pipeline {
     etlAppendStaged(spark, repoPaths, outDir, authorGate, _ => ())
 
   /** [[etlAppend]] with a step hook called at each named point of the
-    * publish sequence (`after:<table>` ×5, `before:flip`, `after:flip`) —
-    * the crash-injection / interleave seam the store-level atomicity tests
-    * drive (a hook that throws models a process kill at that instant; a
-    * hook that reads models a concurrent snapshot reader). Production
-    * callers go through [[etlAppend]]'s no-op hook. */
+    * publish sequence (`after:rollback`, `after:<table>` ×5,
+    * `before:flip`, `after:flip`) — the crash-injection / interleave seam
+    * the store-level atomicity tests drive (a hook that throws models a
+    * process kill at that instant; a hook that reads models a concurrent
+    * snapshot reader). Production callers go through [[etlAppend]]'s
+    * no-op hook. */
   private[git] def etlAppendStaged(spark: SparkSession, repoPaths: Seq[String],
       outDir: String, authorGate: Option[String],
       step: String => Unit): Unit = {
@@ -128,7 +147,7 @@ object Pipeline {
     // writer's lease is taken over after the TTL; the flip below re-checks
     // ownership (and CASes on the captured store seq) so a stalled
     // original can never commit over the takeover's generation.
-    graft.ops.GenStore.withLease(fs, base) { lease =>
+    GenStore.withLease(fs, base) { lease =>
     val r = build(spark, repoPaths, authorGate)
     // U6 crash rollback: the window between a per-table manifest commit
     // and the store-manifest flip is NOT idempotent for every table —
@@ -143,14 +162,13 @@ object Pipeline {
     val pubs = scala.collection.mutable.ListBuffer[(String, Publish)]()
     def mergeWrite(table: String, incoming: DataFrame)(
         merge: (DataFrame, DataFrame) => DataFrame): Unit = {
-      pubs += table -> publishWhole(spark, outDir, table, incoming,
-        deferGc = true)(merge)
+      pubs += table -> publishWhole(spark, outDir, table, incoming)(merge)
       step(s"after:$table")
     }
     def mergeWritePartitioned(table: String, partCol: String, incoming: DataFrame)(
         merge: (DataFrame, DataFrame) => DataFrame): Unit = {
       pubs += table -> publishPartitioned(spark, outDir, table, partCol,
-        incoming, deferGc = true)(merge)
+        incoming)(merge)
       step(s"after:$table")
     }
 
@@ -171,15 +189,15 @@ object Pipeline {
 
     // U6 store-level atomicity (transactions.ts:43-56: ONE transaction per
     // repo covers all five loads): the five per-table publishes above
-    // DEFERRED their generation GC, so every previous-generation data file
-    // and per-table manifest still exists. One atomic rename of the root
-    // store manifest — naming each table's newly committed per-table
+    // returned their generation GC unrun, so every previous-generation data
+    // file and per-table manifest still exists. One atomic rename of the
+    // root store manifest — naming each table's newly committed per-table
     // manifest — is the cross-table commit point: a [[readStoreSnapshot]]
     // reader before the flip resolves ALL five tables at the previous
     // generation (never commits without their file_changes), after it at
-    // the new one. Only then does the deferred GC drop what the previous
-    // store generation referenced; a crash anywhere before the flip leaves
-    // the previous store snapshot fully intact, and the next run's entry
+    // the new one. Only then does the GC drop what the previous store
+    // generation referenced; a crash anywhere before the flip leaves the
+    // previous store snapshot fully intact, and the next run's entry
     // rollback discards the aborted per-table publishes before merging —
     // so even the NON-idempotent authors merge (counts ADD) converges to
     // exactly the committed runs' totals, matching the reference's
@@ -189,11 +207,10 @@ object Pipeline {
     // past the lease TTL and was taken over must refuse to flip over the
     // takeover's generation; (2) optimistic CAS — the flip commits at
     // exactly entry-seq+1, so even with a broken lease a generation
-    // committed underneath makes this rename fail loudly instead of
+    // committed underneath makes this commit fail loudly instead of
     // silently superseding it.
-    lease.checkOwned("store-manifest flip")
     commitStoreManifest(fs, base, baseSeq + 1,
-      pubs.map { case (t, p) => t -> p.manifest }.toSeq)
+      pubs.map { case (t, p) => t -> p.manifest }.toSeq, Some(lease))
     step("after:flip")
     pubs.foreach(_._2.gc())
 
@@ -218,24 +235,24 @@ object Pipeline {
     * pinning each table at its current baseline (an empty per-table
     * manifest for fresh tables) — so even a crash mid-FIRST-run has a
     * defined rollback point. A named manifest that no longer exists
-    * (pre-pinning compact, legacy store) rolls back nothing for that
-    * table — matching [[readStoreSnapshot]]'s documented fallback.
-    * Returns the committed store generation's seq; the flip commits at
-    * exactly seq+1. */
+    * (legacy store) rolls back nothing for that table — matching
+    * [[readStoreSnapshot]]'s documented fallback. Returns the committed
+    * store generation's seq; the flip commits at exactly seq+1. */
   private def rollbackToStoreGeneration(fs: FileSystem, base: Path,
       outDir: String): Long =
-    latestStoreManifest(fs, base) match {
-      case Some(sm) =>
+    GenStore.latestPointer(fs, base, StoreManifestPrefix) match {
+      case Some((storeSeq, sm)) =>
         readStoreManifest(fs, sm).foreach { case (t, mname) =>
           val store = new Path(s"$outDir/$t")
           val named = new Path(store, mname)
           if (fs.exists(store) && fs.exists(named)) {
-            val keep = readManifest(fs, named).toSet
+            val keep = GenStore.readPointer(fs, named).toSet
             fs.listStatus(store).map(_.getPath)
               .filter(p => p.getName.startsWith(ManifestPrefix) &&
-                manifestSeq(p.getName) > manifestSeq(mname))
+                GenStore.pointerSeq(ManifestPrefix, p.getName) >
+                  GenStore.pointerSeq(ManifestPrefix, mname))
               .foreach { m =>
-                readManifest(fs, m).filterNot(keep).foreach { f =>
+                GenStore.readPointer(fs, m).filterNot(keep).foreach { f =>
                   val df = new Path(store, f)
                   if (fs.exists(df)) fs.delete(df, false)
                 }
@@ -243,7 +260,7 @@ object Pipeline {
               }
           }
         }
-        storeManifestSeq(sm.getName)
+        storeSeq
       case None =>
         val entries = StoreTables.map { t =>
           val store = new Path(s"$outDir/$t")
@@ -259,56 +276,40 @@ object Pipeline {
     }
 
   /** One per-table publish's outcome: the committed manifest's file name
-    * (what the store-level manifest records) and the deferred
-    * generation-GC thunk — pruning superseded per-table manifests and
-    * dropping the replaced generation's data files. Run immediately by
-    * standalone publishes; deferred until after the store-manifest flip by
-    * [[etlAppendStaged]], so the previous cross-table snapshot stays fully
-    * resolvable up to the flip. */
+    * (what the store-level manifest records) and the generation-GC thunk —
+    * pruning superseded per-table manifests and dropping the replaced
+    * generation's data files. The caller runs it once the previous
+    * snapshot need not stay resolvable: [[etlAppendStaged]] after the
+    * store-manifest flip. */
   private[git] final case class Publish(manifest: String, gc: () => Unit)
 
   /** Whole-table keyed merge publish (dimension tables): merge → stage →
-    * move files in → manifest commit → drop the replaced generation
-    * (immediately, or deferred to the returned thunk when `deferGc`). */
+    * move files in → manifest commit; the GC drops the replaced
+    * generation. */
   private[git] def publishWhole(spark: SparkSession, outDir: String,
-      table: String, incoming: DataFrame, deferGc: Boolean = false)(
+      table: String, incoming: DataFrame)(
       merge: (DataFrame, DataFrame) => DataFrame): Publish = {
     val path = new Path(s"$outDir/$table")
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverTable(fs, outDir, table)
     val (seq, snap) = baselinedSnapshot(fs, path)
     cleanJunk(fs, path, snap.toSet, Seq(""))
     val merged =
-      if (snap.nonEmpty)
-        merge(spark.read.option("basePath", path.toString)
-          .parquet(snap.map(f => new Path(path, f).toString): _*), incoming)
+      if (snap.nonEmpty) merge(readFiles(spark.read, path, snap), incoming)
       else incoming
-    val staged = new Path(s"$outDir/.$table.__staged")
-    fs.delete(staged, true)
-    merged.write.mode("overwrite").parquet(staged.toString)
+    val staged = stage(fs, outDir, table)(merged.write.mode("overwrite").parquet(_))
     fs.mkdirs(path)
-    val moved = moveDataFiles(fs, staged, path)
-    fs.delete(staged, true)
-    val name = commitManifest(fs, path, seq + 1, moved)
-    val gc = () => {
-      pruneManifests(fs, path, seq + 1)
-      snap.foreach(f => fs.delete(new Path(path, f), false))
-    }
-    if (deferGc) Publish(name, gc) else { gc(); Publish(name, () => ()) }
+    commitPublish(fs, path, staged, seq, moveDataFiles(fs, staged, path), snap)
   }
 
   /** Partitioned keyed merge publish (fact tables): prune the store read to
     * the incoming batch's partitions via the manifest, merge, stage
-    * partitioned, move the staged files in, commit the manifest, then drop
-    * the replaced partitions' previous generation. */
+    * partitioned, move the staged files in and commit the manifest; the GC
+    * drops the replaced partitions' previous generation. */
   private[git] def publishPartitioned(spark: SparkSession, outDir: String,
-      table: String, partCol: String, incoming: DataFrame,
-      deferGc: Boolean = false)(
+      table: String, partCol: String, incoming: DataFrame)(
       merge: (DataFrame, DataFrame) => DataFrame): Publish = {
     val store = new Path(s"$outDir/$table")
     val fs = store.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverTable(fs, outDir, table)
-    recoverPartitions(fs, store)
     val (seq, snap) = baselinedSnapshot(fs, store)
     // A store written by the old FLAT layout (or the empty-table marker)
     // has data files at the root: those rows span ALL repos, so a pruned
@@ -349,48 +350,19 @@ object Pipeline {
           if (flatData) snap
           else snap.filter(f => touchedDirs.contains(f.split('/').head))
         if (files.isEmpty) incoming
-        else {
-          val existing = spark.read.schema(incoming.schema)
-            .option("basePath", store.toString)
-            .parquet(files.map(f => new Path(store, f).toString): _*)
-          merge(existing, incoming).select(incoming.columns.map(col): _*)
-        }
+        else merge(readFiles(spark.read.schema(incoming.schema), store, files),
+          incoming).select(incoming.columns.map(col): _*)
       } else incoming
-    val staged = new Path(s"$outDir/.$table.__staged")
-    fs.delete(staged, true)
-    merged.write.mode("overwrite").partitionBy(partCol).parquet(staged.toString)
+    val staged = stage(fs, outDir, table)(
+      merged.write.mode("overwrite").partitionBy(partCol).parquet(_))
     fs.mkdirs(store)
     val partDirs = fs.listStatus(staged).filter(_.isDirectory)
-    if (partDirs.isEmpty) {
-      // Empty merged result (e.g. a run with no tags): a partitioned
-      // write emits no files, which would leave an unreadable empty dir.
-      // Keep the table readable with a flat empty-schema'd parquet —
-      // replaced by real partition dirs the first time any appear.
-      if (snap.isEmpty) {
-        fs.delete(staged, true)
-        merged.write.mode("overwrite").parquet(staged.toString)
-        val moved = moveDataFiles(fs, staged, store)
-        val name = commitManifest(fs, store, seq + 1, moved)
-        fs.delete(staged, true)
-        val gc = () => pruneManifests(fs, store, seq + 1)
-        if (deferGc) Publish(name, gc)
-        else { gc(); Publish(name, () => ()) }
-      } else {
-        // Nothing new and nothing merged: the committed snapshot stands.
-        // Guard the fresh-store degenerate (seq would be -1): every
-        // Publish must name a REAL manifest — a store-manifest entry that
-        // dangles would silently drop this table out of the cross-table
-        // generation pinning.
-        fs.delete(staged, true)
-        if (seq < 0) Publish(commitManifest(fs, store, 0L, Nil), () => ())
-        else Publish(manifestName(seq), () => ())
-      }
-    } else {
+    if (partDirs.nonEmpty) {
       // Move each staged partition's files into the live partition dir
       // (names are unique per write job — nothing is overwritten), then
       // commit: untouched partitions keep their manifest entries; the
       // replaced generation (all root files on the migration path) is
-      // dropped only after the new manifest is live.
+      // dropped by the GC, once the new manifest is live.
       val newEntries = partDirs.flatMap { p =>
         val name = p.getPath.getName
         val dest = new Path(store, name)
@@ -401,88 +373,83 @@ object Pipeline {
       val dropped =
         if (flatData) snap
         else snap.filter(f => replacedTop.contains(f.split('/').head))
+      commitPublish(fs, store, staged, seq, snap.diff(dropped) ++ newEntries, dropped)
+    } else if (snap.isEmpty) {
+      // Empty merged result (e.g. a run with no tags): a partitioned
+      // write emits no files, which would leave an unreadable empty dir.
+      // Keep the table readable with a flat empty-schema'd parquet —
+      // replaced by real partition dirs the first time any appear.
+      val flat = stage(fs, outDir, table)(merged.write.mode("overwrite").parquet(_))
+      commitPublish(fs, store, flat, seq, moveDataFiles(fs, flat, store), Nil)
+    } else {
+      // Nothing new and nothing merged: the committed snapshot stands
+      // (snap is non-empty, so seq names a real manifest).
       fs.delete(staged, true)
-      val name = commitManifest(fs, store, seq + 1, snap.diff(dropped) ++ newEntries)
-      val gc = () => {
-        pruneManifests(fs, store, seq + 1)
-        dropped.foreach(f => fs.delete(new Path(store, f), false))
-      }
-      if (deferGc) Publish(name, gc) else { gc(); Publish(name, () => ()) }
+      Publish(manifestName(seq), () => ())
     }
   }
 
+  /** A fresh dot-prefixed staging dir for `table` (invisible to readers),
+    * filled by `write`. */
+  private def stage(fs: FileSystem, outDir: String, table: String)(
+      write: String => Unit): Path = {
+    val staged = new Path(s"$outDir/.$table.__staged")
+    fs.delete(staged, true)
+    write(staged.toString)
+    staged
+  }
+
+  /** The publish tail both table shapes share: drop the emptied staging
+    * dir, commit `entries` as manifest seq+1, and hand back the GC that
+    * prunes the superseded manifests and deletes `dropped`. */
+  private def commitPublish(fs: FileSystem, store: Path, staged: Path,
+      seq: Long, entries: Seq[String], dropped: Seq[String]): Publish = {
+    fs.delete(staged, true)
+    val name = commitManifest(fs, store, seq + 1, entries)
+    Publish(name, () => {
+      GenStore.prunePointers(fs, store, ManifestPrefix, seq + 1)
+      dropped.foreach(f => fs.delete(new Path(store, f), false))
+    })
+  }
+
   // -----------------------------------------------------------------------
-  // Snapshot manifests — the commit protocol for the incremental store.
+  // Snapshot manifests — the incremental store's per-table pointer files.
   //
   // A store's state is defined by its highest `_manifest-<seq>` file: a
-  // sorted list of store-relative data-file paths. Data files are immutable
-  // and uniquely named (Spark's per-job UUID part names), so a publish only
-  // ever ADDS files and then commits a new manifest with ONE atomic
-  // file rename — the only atomic primitive required, available on object
-  // stores where directory renames are not. Readers ([[readSnapshot]])
-  // resolve the manifest and read exactly its files: a concurrent publish's
-  // staging and file moves are invisible, and a crash before the commit
-  // leaves the previous snapshot untouched. Files the committed manifest
-  // does not reference are junk by definition and are deleted by the next
-  // writer. Underscore-prefixed names are ignored by Spark's file index, so
-  // the manifests are invisible to raw directory reads — and because the
-  // replaced generation is dropped as soon as the new manifest is live, an
-  // at-rest directory listing equals the manifest exactly (pre-manifest
-  // readers keep working). Single writer assumed (matching the reference's
-  // one-process model); a reader overlapping two publishes of the same
+  // sorted list of store-relative data-file paths, committed through the
+  // pointer-file protocol the index stores share ([[GenStore]]: dot-tmp
+  // write, exists check, one atomic rename). Data files are immutable and
+  // uniquely named (Spark's per-job UUID part names), so a publish only
+  // ever ADDS files and then commits a new manifest. Readers
+  // ([[readSnapshot]]) resolve the manifest and read exactly its files: a
+  // concurrent publish's staging and file moves are invisible, and a crash
+  // before the commit leaves the previous snapshot untouched. Files the
+  // committed manifest does not reference are junk by definition and are
+  // deleted by the next writer. Underscore-prefixed names are ignored by
+  // Spark's file index, so the manifests are invisible to raw directory
+  // reads — and because the replaced generation is dropped right after the
+  // commit, an at-rest directory listing equals the manifest exactly
+  // (plain directory readers keep working). Single writer, enforced by the
+  // store-root lease; a reader overlapping two publishes of the same
   // partition should re-resolve the manifest or run with
   // spark.sql.files.ignoreMissingFiles.
   // -----------------------------------------------------------------------
 
   private val ManifestPrefix = "_manifest-"
 
-  private def manifestSeq(name: String): Long =
-    name.stripPrefix(ManifestPrefix).toLong
-
-  private def latestManifest(fs: FileSystem, store: Path): Option[Path] =
-    if (!fs.exists(store)) None
-    else fs.listStatus(store).map(_.getPath)
-      .filter(_.getName.startsWith(ManifestPrefix))
-      .sortBy(p => manifestSeq(p.getName)).lastOption
-
-  private def readManifest(fs: FileSystem, m: Path): Seq[String] = {
-    val in = fs.open(m)
-    try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-      .filter(_.nonEmpty).toList
-    finally in.close()
-  }
-
   private def manifestName(seq: Long): String = f"$ManifestPrefix$seq%09d"
 
-  /** Write the next manifest: staged under a dot-tmp name (invisible,
-    * junk if orphaned), promoted by one atomic rename. Returns the
-    * committed manifest's file name. Superseded manifests are NOT pruned
-    * here — that is generation GC ([[pruneManifests]]), which
-    * [[etlAppendStaged]] defers until after the store-manifest flip so a
+  /** Commit per-table manifest `seq` listing `files`; returns its name.
+    * Superseded manifests are NOT pruned here — that is the publish's GC,
+    * which [[etlAppendStaged]] runs only after the store-manifest flip so a
     * cross-table reader can keep resolving the previous generation. */
-  private def commitManifest(fs: FileSystem, store: Path, seq: Long,
+  private[git] def commitManifest(fs: FileSystem, store: Path, seq: Long,
       files: Seq[String]): String = {
-    val tmp = new Path(store, s".manifest-tmp-${java.util.UUID.randomUUID()}")
-    val out = fs.create(tmp, true)
-    try out.write(files.sorted.mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-    val dest = new Path(store, manifestName(seq))
-    // Single-writer check: a dest that already exists means another writer
-    // committed this seq — fail rather than clobber (local-FS rename
-    // overwrites silently; on HDFS/object stores the rename itself fails).
-    require(!fs.exists(dest), s"concurrent publish detected: $dest exists")
-    require(fs.rename(tmp, dest), s"manifest commit failed at $dest")
-    dest.getName
+    val name = manifestName(seq)
+    GenStore.commitPointer(fs, store, ManifestPrefix, name,
+      files.sorted.mkString("\n"))
+    name
   }
-
-  /** Drop per-table manifests superseded by `seq` — the manifest half of
-    * generation GC. Idempotent; a crash that skips it leaves only stale
-    * manifests the next successful publish's GC prunes. */
-  private def pruneManifests(fs: FileSystem, store: Path, seq: Long): Unit =
-    fs.listStatus(store).map(_.getPath)
-      .filter(p => p.getName.startsWith(ManifestPrefix) &&
-        manifestSeq(p.getName) < seq)
-      .foreach(fs.delete(_, false))
 
   /** Every data file under `store` (recursive), store-relative, skipping
     * dot-prefixed staging/tmp subtrees. */
@@ -501,35 +468,32 @@ object Pipeline {
   }
 
   /** The store's committed snapshot (manifest seq, relative file paths).
-    * A store written before the manifest layout (plain [[etl]] output, or
-    * an old-layout [[etlAppend]] store) has none: its directory listing IS
-    * its snapshot, and the baseline is committed as seq 0 before any file
-    * moves in — from then on junk is always distinguishable from data. */
+    * A store with no manifest (plain [[etl]] output, or a table written
+    * out of band) has none: its directory listing IS its snapshot, and the
+    * baseline is committed as seq 0 before any file moves in — from then
+    * on junk is always distinguishable from data. */
   private def baselinedSnapshot(fs: FileSystem, store: Path): (Long, Seq[String]) =
-    latestManifest(fs, store) match {
-      case Some(m) => (manifestSeq(m.getName), readManifest(fs, m))
+    GenStore.latestPointer(fs, store, ManifestPrefix) match {
+      case Some((seq, m)) => (seq, GenStore.readPointer(fs, m))
       case None =>
         val files = listDataFiles(fs, store)
         if (fs.exists(store)) { commitManifest(fs, store, 0L, files); (0L, files) }
         else (-1L, files)
     }
 
-  /** Delete what a crashed publish can leave: staging and tmp-manifest
-    * dirs (always — one top-level listing), and, within `scanDirs` (the
-    * dirs the caller is about to write; "" = the store root), data files
-    * the committed manifest doesn't reference — moved in by a publish that
-    * died before its commit, or orphaned by one that died between commit
-    * and generation GC. Junk OUTSIDE the scanned dirs is invisible to
-    * manifest readers and is reaped by [[compact]]'s full pass — scoping
-    * the scan keeps per-publish IO proportional to the run, not the
-    * archive's file count. */
+  /** Delete what a crashed publish can leave: orphan tmp manifests and
+    * compaction staging dirs (always — one top-level listing), and, within
+    * `scanDirs` (the dirs the caller is about to write; "" = the store
+    * root), data files the committed manifest doesn't reference — moved in
+    * by a publish that died before its commit, or orphaned by one that
+    * died between commit and generation GC. Junk OUTSIDE the scanned dirs
+    * is invisible to manifest readers and is reaped by [[compact]]'s full
+    * pass — scoping the scan keeps per-publish IO proportional to the run,
+    * not the archive's file count. */
   private def cleanJunk(fs: FileSystem, store: Path, referenced: Set[String],
       scanDirs: Seq[String]): Unit = {
     if (!fs.exists(store)) return
-    fs.listStatus(store).map(_.getPath)
-      .filter(p => p.getName.startsWith(".manifest-tmp-") ||
-        p.getName.startsWith(".compact-staged-"))
-      .foreach(fs.delete(_, true))
+    GenStore.reap(fs, store, GenStore.tmpPrefix(ManifestPrefix), ".compact-staged-")
     scanDirs.distinct.foreach { d =>
       val dir = if (d.isEmpty) store else new Path(store, d)
       if (fs.exists(dir))
@@ -553,38 +517,31 @@ object Pipeline {
         name
       }.toSeq
 
-  /** Roll back a whole-table crash state left by the PRE-manifest layout
-    * (`.{table}.__retired-*` from the old retire→promote swap). Kept for
-    * stores that last published under that layout. */
-  private def recoverTable(fs: FileSystem, outDir: String, table: String): Unit = {
-    val base = new Path(outDir)
-    if (!fs.exists(base)) return
-    val path = new Path(s"$outDir/$table")
-    val retired = fs.listStatus(base).map(_.getPath)
-      .filter(_.getName.startsWith(s".$table.__retired-"))
-    if (!fs.exists(path)) {
-      require(retired.length <= 1,
-        s"unrecoverable state for $table: ${retired.length} retired dirs")
-      retired.foreach(r => require(fs.rename(r, path),
-        s"crash rollback failed for $table"))
-    } else retired.foreach(r => fs.delete(r, true))
+  /** Exactly `files` (store-relative) of one table, partition values from
+    * the dir names. */
+  private def readFiles(reader: DataFrameReader, store: Path,
+      files: Seq[String]): DataFrame =
+    reader.option("basePath", store.toString)
+      .parquet(files.map(f => new Path(store, f).toString): _*)
+
+  /** One table at the snapshot per-table manifest `m` defines. */
+  private def readManifestSnapshot(spark: SparkSession, fs: FileSystem,
+      store: Path, m: Path): DataFrame = {
+    val files = GenStore.readPointer(fs, m)
+    if (files.isEmpty) spark.emptyDataFrame else readFiles(spark.read, store, files)
   }
 
   /** Read a table at its current committed snapshot: resolve the latest
     * manifest and read exactly the files it lists. A publish that is
     * staging, moving files in, or has crashed mid-way is invisible — the
     * resolved snapshot is complete and immutable until the NEXT publish of
-    * the same partitions drops the replaced generation. Pre-manifest
-    * stores (plain [[etl]] output) fall back to a directory read. */
+    * the same partitions drops the replaced generation. Stores without a
+    * manifest (plain [[etl]] output) fall back to a directory read. */
   def readSnapshot(spark: SparkSession, outDir: String, table: String): DataFrame = {
     val store = new Path(s"$outDir/$table")
     val fs = store.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    latestManifest(fs, store) match {
-      case Some(m) =>
-        val files = readManifest(fs, m)
-        if (files.isEmpty) spark.emptyDataFrame
-        else spark.read.option("basePath", store.toString)
-          .parquet(files.map(f => new Path(store, f).toString): _*)
+    GenStore.latestPointer(fs, store, ManifestPrefix) match {
+      case Some((_, m)) => readManifestSnapshot(spark, fs, store, m)
       case None => spark.read.parquet(store.toString)
     }
   }
@@ -593,14 +550,13 @@ object Pipeline {
     * incremental run adds a fresh file set to each touched partition, and
     * long-running stores accumulate small files (the classic 100 TB
     * operational problem — file-count pressure on listing, footer reads,
-    * and task scheduling). Partitions already at or below
-    * `filesPerPartition` data files are skipped (idempotent: a second
-    * compact run touches nothing); the rest are coalesced, moved in, and
-    * committed as ONE new manifest — readers mid-compaction keep the old
-    * snapshot, whose files are dropped only after the commit. Content is
-    * untouched; only the physical file layout changes. */
-  def compact(spark: SparkSession, outDir: String, table: String,
-      filesPerPartition: Int = 1): Unit = {
+    * and task scheduling). Partitions already at one data file are skipped
+    * (idempotent: a second compact run touches nothing); the rest are
+    * coalesced to one file, moved in, and committed as ONE new manifest —
+    * readers mid-compaction keep the old snapshot, whose files are dropped
+    * only after the commit. Content is untouched; only the physical file
+    * layout changes. */
+  def compact(spark: SparkSession, outDir: String, table: String): Unit = {
     val store = new Path(s"$outDir/$table")
     val fs = store.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(store)) return
@@ -611,58 +567,49 @@ object Pipeline {
     // corruption, but an avoidable aborted run whose half-published
     // generation the next run must reap. Serializing here turns that
     // race into a loud refuse-at-acquire, like every other store writer.
-    graft.ops.GenStore.withLease(fs, new Path(outDir)) { _ =>
-      compactLeased(spark, outDir, table, filesPerPartition)
-    }
-  }
-
-  /** [[compact]]'s body, already under the store-root writer lease. */
-  private def compactLeased(spark: SparkSession, outDir: String, table: String,
-      filesPerPartition: Int): Unit = {
-    val store = new Path(s"$outDir/$table")
-    val fs = store.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverPartitions(fs, store)
-    val (seq, snap) = baselinedSnapshot(fs, store)
-    // Compaction is the full-GC pass: it scans every partition (it lists
-    // them anyway), so junk a scoped publish skipped is reaped here.
-    cleanJunk(fs, store, snap.toSet,
-      "" +: snap.map(_.split('/').init.mkString("/")).distinct)
-    val byDir = snap.groupBy(f => f.split('/').init.mkString("/"))
-    val entries = scala.collection.mutable.ArrayBuffer[String]()
-    val dropped = scala.collection.mutable.ArrayBuffer[String]()
-    byDir.toSeq.sortBy(_._1).foreach { case (dir, files) =>
-      if (dir.isEmpty || files.length <= filesPerPartition) entries ++= files
-      else {
-        val partDir = new Path(store, dir)
-        val staged = new Path(store, s".compact-staged-$dir")
-        fs.delete(staged, true)
-        // No basePath: the partition column stays in the path, not the
-        // rewritten files — same layout the publish writes.
-        spark.read.parquet(partDir.toString)
-          .coalesce(filesPerPartition)
-          .write.mode("overwrite").parquet(staged.toString)
-        entries ++= moveDataFiles(fs, staged, partDir).map(n => s"$dir/$n")
-        fs.delete(staged, true)
-        dropped ++= files
+    GenStore.withLease(fs, new Path(outDir)) { _ =>
+      val (seq, snap) = baselinedSnapshot(fs, store)
+      // Compaction is the full-GC pass: it scans every partition (it lists
+      // them anyway), so junk a scoped publish skipped is reaped here.
+      cleanJunk(fs, store, snap.toSet,
+        "" +: snap.map(_.split('/').init.mkString("/")).distinct)
+      val byDir = snap.groupBy(f => f.split('/').init.mkString("/"))
+      val entries = scala.collection.mutable.ArrayBuffer[String]()
+      val dropped = scala.collection.mutable.ArrayBuffer[String]()
+      byDir.toSeq.sortBy(_._1).foreach { case (dir, files) =>
+        if (dir.isEmpty || files.length <= 1) entries ++= files
+        else {
+          val partDir = new Path(store, dir)
+          val staged = new Path(store, s".compact-staged-$dir")
+          fs.delete(staged, true)
+          // No basePath: the partition column stays in the path, not the
+          // rewritten files — same layout the publish writes.
+          spark.read.parquet(partDir.toString)
+            .coalesce(1)
+            .write.mode("overwrite").parquet(staged.toString)
+          entries ++= moveDataFiles(fs, staged, partDir).map(n => s"$dir/$n")
+          fs.delete(staged, true)
+          dropped ++= files
+        }
       }
-    }
-    if (dropped.nonEmpty) {
-      val name = commitManifest(fs, store, seq + 1, entries.toSeq)
-      // Keep the cross-table generation pinned through compaction: if the
-      // root store manifest names this table, re-commit it pointing at the
-      // compacted manifest BEFORE the superseded one is pruned — a
-      // readStoreSnapshot reader re-resolves to the compacted (content-
-      // identical) snapshot instead of dangling onto the fallback path,
-      // and the next run's entry rollback keeps its anchor.
-      val baseDir = new Path(outDir)
-      latestStoreManifest(fs, baseDir).foreach { sm =>
-        val es = readStoreManifest(fs, sm)
-        if (es.contains(table))
-          commitStoreManifest(fs, baseDir, storeManifestSeq(sm.getName) + 1,
-            (es + (table -> name)).toSeq)
+      if (dropped.nonEmpty) {
+        val name = commitManifest(fs, store, seq + 1, entries.toSeq)
+        // Keep the cross-table generation pinned through compaction: if the
+        // root store manifest names this table, re-commit it pointing at the
+        // compacted manifest BEFORE the superseded one is pruned — a
+        // readStoreSnapshot reader re-resolves to the compacted (content-
+        // identical) snapshot instead of dangling onto the fallback path,
+        // and the next run's entry rollback keeps its anchor.
+        val baseDir = new Path(outDir)
+        GenStore.latestPointer(fs, baseDir, StoreManifestPrefix).foreach {
+          case (storeSeq, sm) =>
+            val es = readStoreManifest(fs, sm)
+            if (es.contains(table))
+              commitStoreManifest(fs, baseDir, storeSeq + 1, (es + (table -> name)).toSeq)
+        }
+        GenStore.prunePointers(fs, store, ManifestPrefix, seq + 1)
+        dropped.foreach(f => fs.delete(new Path(store, f), false))
       }
-      pruneManifests(fs, store, seq + 1)
-      dropped.foreach(f => fs.delete(new Path(store, f), false))
     }
   }
 
@@ -672,61 +619,40 @@ object Pipeline {
   // The reference wraps all five table loads of a repo in ONE SQLite
   // transaction (src/transactions.ts:43-56, main.ts:103-130), so a
   // concurrent reader (Metabase over WAL, db/index.ts:23) never observes
-  // commits without their file_changes. The per-table manifest protocol
-  // above is atomic per table but publishes the five tables sequentially —
-  // a reader between two per-table commits would see a cross-table-
-  // inconsistent store. The root `_store-manifest-<seq>` closes that: one
-  // file naming each table's committed per-table manifest, flipped by one
-  // atomic rename after all five publishes, with each table's generation
-  // GC deferred past the flip. [[readStoreSnapshot]] resolves through it:
-  // before the flip every table reads at the previous generation, after it
-  // at the new one — the store-level analogue of the reference's
-  // transaction boundary. Single writer assumed (the per-table protocol's
-  // standing assumption); a reader overlapping the post-flip GC of a
-  // concurrent publish should re-resolve, exactly as for per-table reads.
+  // commits without their file_changes. The per-table manifests above are
+  // atomic per table but publish the five tables sequentially — a reader
+  // between two per-table commits would see a cross-table-inconsistent
+  // store. The root `_store-manifest-<seq>` closes that: one pointer file
+  // (the same [[GenStore]] protocol) naming each table's committed
+  // per-table manifest, flipped after all five publishes, with each
+  // table's generation GC run only after the flip. [[readStoreSnapshot]]
+  // resolves through it: before the flip every table reads at the previous
+  // generation, after it at the new one — the store-level analogue of the
+  // reference's transaction boundary. A reader overlapping the post-flip
+  // GC of a concurrent publish should re-resolve, exactly as for
+  // per-table reads.
   // -----------------------------------------------------------------------
 
   private val StoreManifestPrefix = "_store-manifest-"
 
-  private def storeManifestSeq(name: String): Long =
-    name.stripPrefix(StoreManifestPrefix).toLong
-
-  private def latestStoreManifest(fs: FileSystem, base: Path): Option[Path] =
-    if (!fs.exists(base)) None
-    else fs.listStatus(base).map(_.getPath)
-      .filter(_.getName.startsWith(StoreManifestPrefix))
-      .sortBy(p => storeManifestSeq(p.getName)).lastOption
-
-  /** `table<TAB>per-table-manifest-name` lines, committed by one atomic
-    * rename; superseded store manifests pruned after the flip. */
-  private def commitStoreManifest(fs: FileSystem, base: Path, seq: Long,
-      entries: Seq[(String, String)]): Unit = {
-    val tmp = new Path(base, s".store-manifest-tmp-${java.util.UUID.randomUUID()}")
-    val out = fs.create(tmp, true)
-    try out.write(entries.sortBy(_._1).map { case (t, m) => s"$t\t$m" }
-      .mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-    val dest = new Path(base, f"$StoreManifestPrefix$seq%09d")
-    require(!fs.exists(dest), s"concurrent store publish detected: $dest exists")
-    require(fs.rename(tmp, dest), s"store manifest commit failed at $dest")
-    fs.listStatus(base).map(_.getPath)
-      .filter(p => p.getName.startsWith(StoreManifestPrefix) &&
-        storeManifestSeq(p.getName) < seq)
-      .foreach(fs.delete(_, false))
-    fs.listStatus(base).map(_.getPath)
-      .filter(_.getName.startsWith(".store-manifest-tmp-"))
-      .foreach(fs.delete(_, false))
+  /** Commit store manifest `seq` as sorted `table<TAB>per-table-manifest`
+    * lines (ownership re-checked through `lease` when given), then prune
+    * superseded store manifests and reap orphan tmps. */
+  private[git] def commitStoreManifest(fs: FileSystem, base: Path, seq: Long,
+      entries: Seq[(String, String)],
+      lease: Option[GenStore.Lease] = None): Unit = {
+    GenStore.commitPointer(fs, base, StoreManifestPrefix,
+      f"$StoreManifestPrefix$seq%09d",
+      entries.sortBy(_._1).map { case (t, m) => s"$t\t$m" }.mkString("\n"), lease)
+    GenStore.prunePointers(fs, base, StoreManifestPrefix, seq)
+    GenStore.reap(fs, base, GenStore.tmpPrefix(StoreManifestPrefix))
   }
 
-  private def readStoreManifest(fs: FileSystem, m: Path): Map[String, String] = {
-    val in = fs.open(m)
-    try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-      .filter(_.nonEmpty).map { line =>
-        val Array(t, name) = line.split('\t')
-        t -> name
-      }.toMap
-    finally in.close()
-  }
+  private def readStoreManifest(fs: FileSystem, m: Path): Map[String, String] =
+    GenStore.readPointer(fs, m).map { line =>
+      val Array(t, name) = line.split('\t')
+      t -> name
+    }.toMap
 
   /** Read a table at the store's cross-table-consistent committed
     * generation: resolve the root store manifest, then the table's NAMED
@@ -734,80 +660,46 @@ object Pipeline {
     * the SAME [[etlAppend]] run's output even while a later run is
     * mid-publish (its per-table commits and file moves are invisible
     * until its store-manifest flip). Falls back to [[readSnapshot]] when
-    * the store predates the store-manifest layout, the table is outside
-    * it (rejects), or the named manifest was GC'd by a completed later
-    * flip (re-resolving forward is then correct — the newer generation is
-    * the committed one). */
+    * the store has no store manifest, the table is outside it (rejects),
+    * or the named manifest was GC'd by a completed later flip
+    * (re-resolving forward is then correct — the newer generation is the
+    * committed one). */
   def readStoreSnapshot(spark: SparkSession, outDir: String, table: String): DataFrame = {
     val base = new Path(outDir)
     val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val store = new Path(s"$outDir/$table")
-    latestStoreManifest(fs, base).map(readStoreManifest(fs, _)) match {
-      case Some(entries) if entries.contains(table) =>
-        val m = new Path(store, entries(table))
-        if (!fs.exists(m)) readSnapshot(spark, outDir, table)
-        else {
-          val files = readManifest(fs, m)
-          if (files.isEmpty) spark.emptyDataFrame
-          else spark.read.option("basePath", store.toString)
-            .parquet(files.map(f => new Path(store, f).toString): _*)
-        }
-      case _ => readSnapshot(spark, outDir, table)
+    val named = GenStore.latestPointer(fs, base, StoreManifestPrefix)
+      .flatMap { case (_, sm) => readStoreManifest(fs, sm).get(table) }
+      .map(new Path(store, _))
+    named.filter(fs.exists) match {
+      case Some(m) => readManifestSnapshot(spark, fs, store, m)
+      case None => readSnapshot(spark, outDir, table)
     }
-  }
-
-  /** Roll back partitions stranded by the PRE-manifest layout's swap (a
-    * crash between its retire and promote renames): a
-    * `.retired-<uuid>--<partdir>` whose `<partdir>` is missing means the
-    * promote never happened — restore the retired copy; one whose partdir
-    * exists is post-promote junk — delete it. Dot-prefixed names are
-    * invisible to Spark's partition discovery either way. Kept for stores
-    * that last published under that layout; the manifest layout has no
-    * retire→promote state to recover. */
-  private def recoverPartitions(fs: FileSystem, store: Path): Unit = {
-    if (!fs.exists(store)) return
-    fs.listStatus(store).map(_.getPath)
-      .filter(_.getName.startsWith(".retired-")).foreach { p =>
-        // name = .retired-<36-char-uuid>--<partdir>
-        val part = p.getName.drop(".retired-".length + 36 + 2)
-        val dest = new Path(store, part)
-        if (part.nonEmpty && !fs.exists(dest)) {
-          require(fs.rename(p, dest), s"crash rollback failed for $dest")
-        } else fs.delete(p, true)
-      }
-    // Stale compaction staging (crash before its retire) is always junk:
-    // the live partition dir was never touched.
-    fs.listStatus(store).map(_.getPath)
-      .filter(_.getName.startsWith(".compact-staged-"))
-      .foreach(fs.delete(_, true))
   }
 
   /** S8 bucketed-layout sink (opt-in): the two fact tables are saved as
-    * catalog tables bucketed AND sorted on (repo_name, sha), so every
-    * downstream keyed operation on that key — the U1/U3 cross-run dedup,
-    * the commits⋈file_changes star join, an as-of join against commit
-    * history — plans as a shuffle-free sort-merge over co-located buckets.
-    * At 100 TB this moves the dominant join cost from a cluster-wide
-    * exchange to a local merge per bucket, paid once at write time.
-    * Dimension tables (authors, tags, repos) stay plain: they broadcast.
-    * Proven by a plan assertion in MainSpec (zero Exchange in the fact
-    * join) — the same machinery BucketedJoinSpec demonstrates on TPC-H. */
+    * catalog tables bucketed (8 buckets) AND sorted on (repo_name, sha), so
+    * every downstream keyed operation on that key — the U1/U3 cross-run
+    * dedup, the commits⋈file_changes star join, an as-of join against
+    * commit history — plans as a shuffle-free sort-merge over co-located
+    * buckets. At 100 TB this moves the dominant join cost from a
+    * cluster-wide exchange to a local merge per bucket, paid once at write
+    * time. Dimension tables (authors, tags, repos) stay plain: they
+    * broadcast. The per-run rejects stay out of the catalog. Proven by a
+    * plan assertion in MainSpec (zero Exchange in the fact join) — the
+    * same machinery BucketedJoinSpec demonstrates on TPC-H. */
   def etlBucketed(spark: SparkSession, repoPaths: Seq[String],
-      tablePrefix: String, buckets: Int = 8,
-      authorGate: Option[String] = None): Result = {
-    val r = build(spark, repoPaths, authorGate)
-    Seq("commits" -> r.commits, "file_changes" -> r.fileChanges).foreach {
-      case (name, df) =>
-        df.write.mode("overwrite")
-          .bucketBy(buckets, "repo_name", "sha").sortBy("repo_name", "sha")
-          .saveAsTable(s"${tablePrefix}_$name")
+      tablePrefix: String, authorGate: Option[String] = None): Result =
+    sink(spark, repoPaths, authorGate) {
+      case ("rejects", _) => ()
+      case (t, df) =>
+        val w = df.write.mode("overwrite")
+        val laid =
+          if (t == "commits" || t == "file_changes")
+            w.bucketBy(8, "repo_name", "sha").sortBy("repo_name", "sha")
+          else w
+        laid.saveAsTable(s"${tablePrefix}_$t")
     }
-    r.authors.write.mode("overwrite").saveAsTable(s"${tablePrefix}_authors")
-    r.tags.write.mode("overwrite").saveAsTable(s"${tablePrefix}_tags")
-    r.repos.write.mode("overwrite").saveAsTable(s"${tablePrefix}_repos")
-    r.release()
-    r
-  }
 
   /** S8 JDBC sink option, mirroring the reference's embedded-file database
     * contract (db/index.ts:4: a single SQLite file consumed by external BI
@@ -819,20 +711,14 @@ object Pipeline {
     * summaries, not 100 TB fact tables. */
   def etlJdbc(spark: SparkSession, repoPaths: Seq[String], jdbcUrl: String,
       authorGate: Option[String] = None): Result = {
-    val r = build(spark, repoPaths, authorGate)
     val props = new java.util.Properties()
-    def w(table: String, df: DataFrame): Unit =
-      df.write.mode("overwrite").jdbc(jdbcUrl, table, props)
-    w("commits", r.commits)
-    w("authors", r.authors)
-    w("file_changes", r.fileChanges)
-    w("tags", r.tags)
-    w("repos", r.repos)
-    // validation_errors is array-typed — JDBC needs a scalar rendering
-    w("rejects", r.rejects.withColumn("validation_errors",
-      concat_ws("; ", col("validation_errors"))))
-    r.release()
-    r
+    sink(spark, repoPaths, authorGate) {
+      // validation_errors is array-typed — JDBC needs a scalar rendering
+      case (t @ "rejects", df) =>
+        df.withColumn("validation_errors", concat_ws("; ", col("validation_errors")))
+          .write.mode("overwrite").jdbc(jdbcUrl, t, props)
+      case (t, df) => df.write.mode("overwrite").jdbc(jdbcUrl, t, props)
+    }
   }
 
   /** S10: formatted console summary report (src/transforms.ts:64-86). */

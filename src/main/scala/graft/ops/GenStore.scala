@@ -3,42 +3,113 @@ package graft.ops
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
-/** The shared generation-pointer protocol behind the maintained index
-  * stores (IVF `_ivfgen-`, band index `_bandgen-`): generations live in
-  * `gen=<seq>/` dirs and the highest `<prefix><seq>` pointer file names
-  * the live one; a store with no pointer is its own generation 0 at the
-  * root. Promotion is ONE atomic pointer rename; readers resolve the
-  * pointer first, so staging, crashes mid-publish, and the promote
-  * itself are invisible to them.
+/** The seq-numbered pointer-file protocol shared by every store in the
+  * repo, and the writer lease that guards it.
   *
-  * Writer contract: maintenance (retrain/compaction) and appends are
-  * SINGLE-WRITER — the daily loop runs them in sequence (q99/q234's
-  * foreachBatch does exactly that). The contract is ENFORCED by the
-  * [[withLease]] writer lease (create-fail-if-exists `_maintenance
-  * .lease` with epoch-TTL takeover of crashed holders): a second
-  * maintenance run fails loudly at acquire, before preClean can touch
-  * shared state; the promote-time `require` remains as a backstop. An
+  * A pointer file `<prefix><seq>` defines a store's live state; the
+  * HIGHEST seq (compared numerically) wins. A commit stages the pointer
+  * under a dot-tmp name, refuses an existing destination, and promotes it
+  * with ONE atomic file rename — the only atomic primitive needed, and one
+  * object stores have where directory renames are not. Readers resolve
+  * the pointer first, so staging, crashes mid-publish and the commit
+  * itself are invisible to them. Callers choose the name's seq format and
+  * the pointer's content:
+  *   - the git store ([[graft.git.Pipeline]]): per-table
+  *     `_manifest-%09d` listing the table's data files, and the root
+  *     `_store-manifest-%09d` naming each table's manifest;
+  *   - the maintained index stores (IVF `_ivfgen-`, band index
+  *     `_bandgen-`): an unpadded `<prefix><seq>` holding `gen=<seq>`, the
+  *     live generation's `gen=<seq>/` dir. A store with no pointer is its
+  *     own generation 0 at the root ([[promote]], [[preClean]]).
+  *
+  * Writer contract: each store is SINGLE-WRITER. The git store's writers
+  * and every index maintenance run (retrain/compaction/forget) ENFORCE it
+  * with the [[withLease]] writer lease (create-fail-if-exists
+  * `_maintenance.lease` with epoch-TTL takeover of crashed holders): a
+  * second writer fails loudly at acquire, before it can touch shared
+  * state; the commit-time exists check remains as a backstop. An index
   * append racing a maintenance run is still the caller's bug, not a
   * protocol state this store can repair.
   *
-  * Crash windows, all reclaimed by [[preClean]] on the NEXT maintenance
-  * run: a death before the pointer rename leaves a `.{tmp}` pointer file
-  * and an unreferenced `gen=<seq>` dir; a death between the rename and
-  * the superseded-generation delete leaves the replaced generation's
-  * data (root artifacts or the prior gen dir) behind. */
+  * Crash windows: a death before the pointer rename leaves a dot-tmp
+  * pointer (reaped by [[reap]]) and unreferenced data; a death between the
+  * rename and the GC leaves superseded pointers ([[prunePointers]]) and
+  * the replaced generation's data, reclaimed by the store's next writer. */
 private[graft] object GenStore {
 
   def fsOf(spark: SparkSession, dir: String): FileSystem =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Highest committed pointer seq, 0 when the root layout is live. */
-  def currentSeq(fs: FileSystem, base: Path, prefix: String): Long = {
-    if (!fs.exists(base)) return 0L
-    fs.listStatus(base).map(_.getPath.getName)
-      .filter(_.startsWith(prefix))
-      .map(_.stripPrefix(prefix).toLong)
-      .maxOption.getOrElse(0L)
+  // ---- pointer files -------------------------------------------------------
+
+  /** Dot-tmp name prefix a `<prefix><seq>` pointer is staged under:
+    * `_manifest-` → `.manifest-tmp-`, `_ivfgen-` → `.ivfgen-tmp-`. */
+  def tmpPrefix(prefix: String): String =
+    "." + prefix.stripPrefix("_").stripSuffix("-") + "-tmp-"
+
+  /** The seq a `<prefix><seq>` pointer name carries, padded or not. */
+  def pointerSeq(prefix: String, name: String): Long =
+    name.stripPrefix(prefix).toLong
+
+  /** The highest committed `<prefix><seq>` pointer in `dir` and its seq —
+    * numeric, so unpadded `_ivfgen-10` beats `_ivfgen-9`. */
+  def latestPointer(fs: FileSystem, dir: Path, prefix: String): Option[(Long, Path)] =
+    if (!fs.exists(dir)) None
+    else fs.listStatus(dir).map(_.getPath)
+      .filter(_.getName.startsWith(prefix))
+      .map(p => pointerSeq(prefix, p.getName) -> p)
+      .maxByOption(_._1)
+
+  /** Commit pointer `name` (`prefix` plus the caller's seq format) in
+    * `dir` holding `content`: staged under a dot-tmp name, ownership
+    * re-checked through `lease` when given (immediately before the
+    * destructive step, so a run taken over past the TTL is refused here
+    * rather than detected after at release), then promoted by one atomic
+    * rename. A destination that already exists means another writer
+    * committed this seq — fail rather than clobber (local-FS rename
+    * overwrites silently; on HDFS/object stores the rename itself fails). */
+  def commitPointer(fs: FileSystem, dir: Path, prefix: String, name: String,
+      content: String, lease: Option[Lease] = None): Unit = {
+    val tmp = new Path(dir, s"${tmpPrefix(prefix)}${java.util.UUID.randomUUID()}")
+    val out = fs.create(tmp, true)
+    try out.write(content.getBytes("UTF-8"))
+    finally out.close()
+    val dest = new Path(dir, name)
+    lease.foreach(_.checkOwned(s"commit of $name"))
+    require(!fs.exists(dest), s"concurrent publish detected: $dest exists")
+    require(fs.rename(tmp, dest), s"pointer commit failed at $dest")
   }
+
+  /** A pointer file's non-empty lines. */
+  def readPointer(fs: FileSystem, p: Path): Seq[String] = {
+    val in = fs.open(p)
+    try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
+      .filter(_.nonEmpty).toList
+    finally in.close()
+  }
+
+  /** Drop `<prefix><seq>` pointers superseded by `seq`. Idempotent; a
+    * crash that skips it leaves only stale pointers, which readers never
+    * resolve and the next commit's prune drops. */
+  def prunePointers(fs: FileSystem, dir: Path, prefix: String, seq: Long): Unit =
+    fs.listStatus(dir).map(_.getPath)
+      .filter(p => p.getName.startsWith(prefix) && pointerSeq(prefix, p.getName) < seq)
+      .foreach(fs.delete(_, false))
+
+  /** Delete (recursively) every entry of `dir` whose name starts with one
+    * of `namePrefixes` — orphan dot-tmp pointers ([[tmpPrefix]]) and any
+    * other crash leftovers the caller names. */
+  def reap(fs: FileSystem, dir: Path, namePrefixes: String*): Unit =
+    if (fs.exists(dir))
+      fs.listStatus(dir).map(_.getPath)
+        .filter(p => namePrefixes.exists(p.getName.startsWith))
+        .foreach(fs.delete(_, true))
+
+  // ---- generation stores (gen=<seq>/ dirs) ---------------------------------
+
+  /** Highest committed generation seq, 0 when the root layout is live. */
+  def currentSeq(fs: FileSystem, base: Path, prefix: String): Long =
+    latestPointer(fs, base, prefix).fold(0L)(_._1)
 
   /** The live generation's root dir (the index root for generation 0). */
   def currentRoot(spark: SparkSession, indexDir: String, prefix: String): String = {
@@ -54,16 +125,11 @@ private[graft] object GenStore {
   def preClean(fs: FileSystem, base: Path, prefix: String, curSeq: Long,
       rootArtifacts: Seq[String]): Unit = {
     if (!fs.exists(base)) return
-    val tmpPrefix = "." + prefix.stripPrefix("_").stripSuffix("-") + "-tmp-"
-    fs.listStatus(base).map(_.getPath).foreach { p =>
-      val n = p.getName
-      if (n.startsWith(tmpPrefix) || n.startsWith(".lease-takeover-") ||
-        n.startsWith(".lease-release-"))
-        fs.delete(p, false)
-      else if (n.startsWith("gen=") &&
-        n.stripPrefix("gen=").toLongOption.exists(_ != curSeq))
-        fs.delete(p, true)
-    }
+    reap(fs, base, tmpPrefix(prefix), ".lease-takeover-", ".lease-release-")
+    fs.listStatus(base).map(_.getPath)
+      .filter(p => p.getName.startsWith("gen=") &&
+        p.getName.stripPrefix("gen=").toLongOption.exists(_ != curSeq))
+      .foreach(fs.delete(_, true))
     if (curSeq > 0L)
       rootArtifacts.foreach(a => fs.delete(new Path(base, a), true))
   }
@@ -218,8 +284,8 @@ private[graft] object GenStore {
   }
 
   /** Live handle to a held lease: the heartbeat renews through it and
-    * [[promote]] re-checks ownership through it immediately before the
-    * pointer rename. Constructed by [[withLease]] (or directly by tests
+    * [[commitPointer]] re-checks ownership through it immediately before
+    * the pointer rename. Constructed by [[withLease]] (or directly by tests
     * that step-serialize the interleave). */
   final class Lease private[ops] (fs: FileSystem, base: Path,
       val owner: String) {
@@ -269,8 +335,8 @@ private[graft] object GenStore {
       }
     }
 
-    /** Assert this owner still holds the lease — [[promote]] calls this
-      * immediately before the pointer rename, so a takeover-then-
+    /** Assert this owner still holds the lease — [[commitPointer]] calls
+      * this immediately before the pointer rename, so a takeover-then-
       * interleave is rejected BEFORE the destructive step rather than
       * detected after at release. A transiently unreadable lease is
       * re-read once before failing: the gate must fail SAFE (refuse the
@@ -304,7 +370,7 @@ private[graft] object GenStore {
     * mistaken for a crashed holder — takeover now requires the heartbeat
     * itself to be dead (killed JVM) for a full TTL, which is exactly the
     * abandoned-property case it exists for. The body receives the
-    * [[Lease]] handle to thread into [[promote]] for the pre-rename
+    * [[Lease]] handle to thread into [[commitPointer]] for the pre-rename
     * ownership re-check. A release failure (lease taken over mid-run)
     * propagates when the body succeeded, but must not MASK the body's
     * own exception when it didn't. */
@@ -355,31 +421,15 @@ private[graft] object GenStore {
     }
   }
 
-  /** Commit `gen=<genSeq>` as the live generation: stage the pointer
-    * under a dot-tmp name, promote with one atomic rename (single-writer
-    * checked), then GC superseded pointers and the replaced generation's
-    * data. The caller has fully written `gen=<genSeq>/` beforehand.
-    * When a [[Lease]] handle is passed (every maintenance path does),
-    * ownership is re-checked immediately before the pointer rename: a
-    * run that stalled past the TTL and was taken over is rejected HERE,
-    * before the destructive step, making takeover-then-interleave
-    * impossible rather than detected-after at release. */
+  /** Commit `gen=<genSeq>` as the live generation: one [[commitPointer]]
+    * (ownership re-checked through `lease` — every maintenance path passes
+    * one), then GC superseded pointers and the replaced generation's data.
+    * The caller has fully written `gen=<genSeq>/` beforehand. */
   def promote(fs: FileSystem, base: Path, prefix: String, genSeq: Long,
       curSeq: Long, rootArtifacts: Seq[String],
       lease: Option[Lease] = None): Unit = {
-    val tmpPrefix = "." + prefix.stripPrefix("_").stripSuffix("-") + "-tmp-"
-    val tmp = new Path(base, s"$tmpPrefix${java.util.UUID.randomUUID()}")
-    val out = fs.create(tmp, true)
-    try out.write(s"gen=$genSeq".getBytes("UTF-8"))
-    finally out.close()
-    val dest = new Path(base, s"$prefix$genSeq")
-    lease.foreach(_.checkOwned(s"promote of $prefix$genSeq"))
-    require(!fs.exists(dest), s"concurrent generation publish detected: $dest exists")
-    require(fs.rename(tmp, dest), s"generation pointer commit failed at $dest")
-    fs.listStatus(base).map(_.getPath)
-      .filter(p => p.getName.startsWith(prefix) &&
-        p.getName.stripPrefix(prefix).toLong < genSeq)
-      .foreach(fs.delete(_, false))
+    commitPointer(fs, base, prefix, s"$prefix$genSeq", s"gen=$genSeq", lease)
+    prunePointers(fs, base, prefix, genSeq)
     if (curSeq == 0L) rootArtifacts.foreach(a => fs.delete(new Path(base, a), true))
     else fs.delete(new Path(base, s"gen=$curSeq"), true)
   }

@@ -165,26 +165,6 @@ class MainSpec extends SparkSpec with BeforeAndAfterAll {
     assert(commits.filter(col("repo_name") === "repoB").count() == 1)
   }
 
-  test("crashed partition swap is rolled back on the next run") {
-    // Self-sufficient store (no dependence on other tests' outputs).
-    val inc = root.resolve("out_crash").toString
-    _root_.graft.git.Pipeline.etlAppend(
-      spark, Seq(repoA.toString, repoB.toString), inc)
-    val commitsDir = Paths.get(inc, "commits")
-    val live = commitsDir.resolve("repo_name=repoB")
-    // Simulate a crash between retire and promote: the partition dir was
-    // renamed aside and the promote never happened.
-    val retired = commitsDir.resolve(
-      s".retired-${java.util.UUID.randomUUID()}--repo_name=repoB")
-    Files.move(live, retired)
-    assert(!Files.exists(live))
-    // The next run (repo A only) recovers repo B's partition first.
-    _root_.graft.git.Pipeline.etlAppend(spark, Seq(repoA.toString), inc)
-    assert(Files.isDirectory(live), "retired partition was not rolled back")
-    assert(spark.read.parquet(s"$inc/commits")
-      .filter(col("repo_name") === "repoB").count() == 1)
-  }
-
   test("compaction coalesces partition files without changing content") {
     val inc = root.resolve("out_compact").toString
     _root_.graft.git.Pipeline.etlAppend(
@@ -311,47 +291,25 @@ class MainSpec extends SparkSpec with BeforeAndAfterAll {
     _root_.graft.git.Pipeline.etlAppend(
       spark, Seq(repoA.toString, repoB.toString), inc)
     val commitsDir = Paths.get(inc, "commits")
-    val live = commitsDir.resolve("repo_name=repoB")
-    val before = spark.read.parquet(s"$inc/commits")
-      .filter(col("repo_name") === "repoB").count()
-    // Crash between compact's retire and promote: the live partition was
-    // renamed aside, the compacted staging is half-written.
-    Files.move(live, commitsDir.resolve(
-      s".retired-${java.util.UUID.randomUUID()}--repo_name=repoB"))
-    Files.createDirectories(commitsDir.resolve(".compact-staged-repo_name=repoB"))
+    def partB() = spark.read.parquet(s"$inc/commits")
+      .filter(col("repo_name") === "repoB").collect().map(_.toString).sorted.toSeq
+    val before = partB()
+    assert(before.nonEmpty)
+    // Crash mid-compaction: the compacted staging dir holds a half-written
+    // file and was never moved in. The live partition is untouched.
+    val staged = commitsDir.resolve(".compact-staged-repo_name=repoB")
+    Files.createDirectories(staged)
+    Files.write(staged.resolve(s"part-${java.util.UUID.randomUUID()}.snappy.parquet"),
+      Array[Byte](1, 2, 3))
     _root_.graft.git.Pipeline.compact(spark, inc, "commits")
-    assert(Files.isDirectory(live), "retired partition was not rolled back")
-    assert(spark.read.parquet(s"$inc/commits")
-      .filter(col("repo_name") === "repoB").count() == before)
+    assert(partB() === before)
     // Staging junk is gone.
     val leftovers = {
       val s = Files.list(commitsDir)
       try s.toArray.map(_.asInstanceOf[java.nio.file.Path].getFileName.toString).toSeq
       finally s.close()
     }
-    assert(!leftovers.exists(n => n.contains("compact-staged") || n.contains("retired")))
-  }
-
-  test("crashed whole-table swap (authors) is rolled back on the next run") {
-    val inc = root.resolve("out_crash2").toString
-    _root_.graft.git.Pipeline.etlAppend(spark, Seq(repoA.toString), inc)
-    val alice = spark.read.parquet(s"$inc/authors")
-      .filter(col("email") === "alice@example.com").collect()(0)
-      .getAs[Long]("total_commits")
-    // Simulate a crash between retire and promote: authors renamed aside,
-    // staged never promoted.
-    val f = Paths.get(inc)
-    Files.move(f.resolve("authors"),
-      f.resolve(s".authors.__retired-${java.util.UUID.randomUUID()}"))
-    assert(!Files.exists(f.resolve("authors")))
-    // The next run must restore the cumulative table BEFORE merging —
-    // otherwise the accumulated counts silently reset to one run's worth.
-    _root_.graft.git.Pipeline.etlAppend(spark, Seq(repoA.toString), inc)
-    val after = spark.read.parquet(s"$inc/authors")
-      .filter(col("email") === "alice@example.com").collect()(0)
-      .getAs[Long]("total_commits")
-    assert(after == alice * 2,
-      s"expected cumulative $alice*2 (reference re-add semantics), got $after")
+    assert(!leftovers.exists(_.contains("compact-staged")))
   }
 
   test("bucketed-layout sink: fact join runs with zero shuffle exchanges") {

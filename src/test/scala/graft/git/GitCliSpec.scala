@@ -93,4 +93,24 @@ class GitCliSpec extends SparkSpec with BeforeAndAfterAll {
     assert(repos(0).getAs[String]("language") == "Scala") // 2 .scala vs 1 .py
     assert(repos(0).getAs[Long]("total_commits") == 3L)
   }
+
+  test("an unreadable repo is reported on stderr and contributes no rows") {
+    // Outside any work tree, so git cannot resolve a parent repo for it.
+    val plain = Files.createTempDirectory("graft-notarepo-")
+    val err = new java.io.ByteArrayOutputStream()
+    val saved = System.err
+    System.setErr(new java.io.PrintStream(err, true, "UTF-8"))
+    val r =
+      try Pipeline.build(spark, Seq(repo.toString, plain.toString))
+      finally System.setErr(saved)
+    try {
+      assert(err.toString("UTF-8").contains(s"skipping unreadable repo: $plain"))
+      assert(r.commits.count() == 3)
+      assert(r.commits.collect().forall(_.getAs[String]("repo_name") == "goldenrepo"))
+      assert(r.repos.collect().map(_.getAs[String]("name")).toSeq == Seq("goldenrepo"))
+    } finally {
+      r.release()
+      Files.delete(plain)
+    }
+  }
 }

@@ -18,12 +18,12 @@ class StorePropertySpec extends SparkSpec {
     // Values Spark must escape in partition dir names: space, colon, percent.
     Pipeline.publishPartitioned(spark, dir, "t", "part",
       rows(Seq(("has space", 1L, 10L), ("col:on", 1L, 20L), ("pct%25", 1L, 30L))))(
-      GitAgg.upsertLatest(_, _, Seq("part", "k")))
+      GitAgg.upsertLatest(_, _, Seq("part", "k"))).gc()
     // Second publish touches ONLY the spaced partition: the manifest prune
     // must resolve its escaped dir name and leave the others untouched.
     Pipeline.publishPartitioned(spark, dir, "t", "part",
       rows(Seq(("has space", 1L, 11L))))(
-      GitAgg.upsertLatest(_, _, Seq("part", "k")))
+      GitAgg.upsertLatest(_, _, Seq("part", "k"))).gc()
     val got = Pipeline.readSnapshot(spark, dir, "t")
       .collect().map(r => (r.getAs[String]("part"), r.getAs[Long]("v"))).toSet
     assert(got == Set(("has space", 11L), ("col:on", 20L), ("pct%25", 30L)))
@@ -63,7 +63,7 @@ class StorePropertySpec extends SparkSpec {
             }
             Pipeline.publishPartitioned(spark, dir, table, partCol,
               rows.toDF(partCol, "k", "v"))(
-              GitAgg.upsertLatest(_, _, Seq(partCol, "k")))
+              GitAgg.upsertLatest(_, _, Seq(partCol, "k"))).gc()
             rows.foreach { case (p, k, v) => model += ((p, k) -> v) }
           case 2 if Files.isDirectory(store) =>
             // Crash injection: the junk a publish dying mid-flight leaves.
