@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 /** Benchmark entry: times every registered query at SPARK_GRAFT_SF_DIR and
   * prints one JSON line (the driver's record).
   *
@@ -92,7 +94,7 @@ object Bench {
         .filterNot(_.isNull).flatMap(c => Option(c.get("total")))
         .filterNot(_.isNull).map(_.asDouble()).filter(_ > 0.0)
       Some((sf, m.toMap, cal))
-    } catch { case _: Throwable => None }
+    } catch { case NonFatal(_) => None }
 
   /** Locale-pinned 3-decimal format: the artifact is load-bearing INPUT
     * for the next run's regression gate, and default-locale `f"%.3f"`
@@ -108,7 +110,7 @@ object Bench {
     try {
       java.nio.file.Files.readString(java.nio.file.Paths.get("/proc/loadavg"))
         .trim.split("\\s+").take(3).mkString("[", ",", "]")
-    } catch { case _: Throwable => "null" }
+    } catch { case NonFatal(_) => "null" }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -164,7 +166,7 @@ object Bench {
           val t0 = System.nanoTime()
           val ok =
             try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-            catch { case _: Throwable => errored += name; false }
+            catch { case NonFatal(_) => errored += name; false }
           if (ok) errored -= name
           val dt = (System.nanoTime() - t0) / 1e9
           best(name) = best.get(name).fold(dt)(math.min(_, dt))
@@ -222,7 +224,7 @@ object Bench {
             fn(spark, sfDir).write.format("noop").mode("overwrite").save()
             val dt = (System.nanoTime() - t0) / 1e9
             best(name) = math.min(best(name), dt)
-          } catch { case _: Throwable => () }
+          } catch { case NonFatal(_) => () }
           spark.catalog.clearCache()
         }
       }
@@ -251,7 +253,7 @@ object Bench {
     val full = s"""{"sf":"$sfDir","cpus":"$cpus","reps":$reps,"total_best":$total,"pass_totals":$passes,"load":$loads,"pass_reruns":$reruns,"errors":$errs,"prev_total":$prevTotalJson,"cal_ratio":$calRatioJson,"regressions":$regrJson,"calibration":$calibration,"queries":$qs}"""
     try java.nio.file.Files.write(
       java.nio.file.Paths.get("bench_full.json"), full.getBytes("UTF-8"))
-    catch { case _: Throwable => () } // an unwritable CWD must not fail the bench
+    catch { case NonFatal(_) => () } // an unwritable CWD must not fail the bench
     spark.stop()
   }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 
 
 /** Dev tool for the optimization rounds: write `.explain("formatted")` for
@@ -28,7 +29,7 @@ object PlanDump {
           org.apache.spark.sql.execution.FormattedMode)
         Files.writeString(outDir.resolve(s"$name.txt"), txt)
         println(s"[plandump] wrote $name")
-      } catch { case e: Throwable =>
+      } catch { case NonFatal(e) =>
         System.err.println(s"[plandump] $name failed: ${e.getMessage}")
       }
       spark.catalog.clearCache()

@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.util.QueryExecutionListener
+import scala.util.control.NonFatal
 
 /** Test-support plan capture for the SIDE-EFFECTFUL tier (streaming gates,
   * index maintenance, source/sink round-trips): those queries execute work
@@ -64,6 +65,6 @@ object PlanProbe {
         case qe: QueryExecution if qe != null => record(label, qe.executedPlan)
         case _ => ()
       }
-    } catch { case _: Throwable => () }
+    } catch { case NonFatal(_) => () }
   }
 }

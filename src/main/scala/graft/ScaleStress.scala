@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -9,7 +10,7 @@ import org.apache.spark.sql.functions._
   * argument plus a plan-shape assertion; this main MEASURES the claims on
   * synthesized corpora up to ~10× sf0.1 and records per-query scaling
   * exponents, plus the three tier constants validated at their boundaries
-  * (BandBucketCap=100, Fuzzy.DriverClosureMaxEdges=2M, SemDeDup's
+  * (BandBucketCap=100, Graph.DriverMaxEdges=2M, SemDeDup's
   * 200-member scan cap).
   *
   * Usage: ScaleStress <sfDir> <workDir> [outJson]
@@ -355,7 +356,7 @@ object ScaleStress {
   private def loadAvg(): String =
     try Files.readString(Paths.get("/proc/loadavg")).trim.split("\\s+")
       .take(3).mkString("[", ",", "]")
-    catch { case _: Throwable => "null" }
+    catch { case NonFatal(_) => "null" }
 
   /** ln-ln least-squares slope over (k, t) samples. */
   def exponent(samples: Seq[(Int, Double)]): Double = {
@@ -432,11 +433,11 @@ object ScaleStress {
     val tSem10 = times("q74_semantic_neardup")(10)
     val tSemHot = runNoop(spark, "q74_semantic_neardup", hotDir)
 
-    // ---- Boundary 3: Fuzzy.DriverClosureMaxEdges=2M. The same 2M-edge
+    // ---- Boundary 3: Graph.DriverMaxEdges=2M. The same 2M-edge
     // graph (400k 5-node stars + one 10k chain threaded through) through
     // BOTH tiers — driver union-find at its ceiling vs the distributed
     // min-label CC — label-identical and both timed.
-    val edges2m = spark.range(2000000L).select(
+    val edges2m = spark.range(graft.ops.Graph.DriverMaxEdges).select(
       when(col("id") < 10000L, col("id") * 5L)
         .otherwise((col("id") - (col("id") % 5L)) + 5000000L).as("doc_a"),
       when(col("id") < 10000L, (col("id") + 1L) * 5L)
@@ -451,7 +452,7 @@ object ScaleStress {
     var driverRes: (Long, Long) = null
     val tDriver = time {
       driverRes = ccHash(graft.ops.Fuzzy.resolveClusters(spark, edges2m,
-        driverMaxEdges = graft.ops.Fuzzy.DriverClosureMaxEdges))
+        driverMaxEdges = graft.ops.Graph.DriverMaxEdges))
     }
     var distRes: (Long, Long) = null
     val tDist = time {

@@ -83,28 +83,26 @@ case class CosineSimF32(left: Expression, right: Expression)
   * membership prefilter against a fixed-size sketch is how a semi-join
   * against a large build side avoids shuffling the full probe side. */
 object GraftFunctions {
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_f32", exprs => CosineSimF32(exprs.head, exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "topk_by_score", TopKByScore.fromExprs, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "freq_sketch", FreqSketch.fromExprs, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "l2sq_f32", exprs => L2SqF32(exprs.head, exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dtw_i64", exprs => DtwI64(exprs.head, exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bloom_filter_agg",
-      exprs => new org.apache.spark.sql.catalyst.expressions.aggregate
-        .BloomFilterAggregate(exprs.head, exprs(1), exprs(2)),
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bloom_might_contain",
-      exprs => new org.apache.spark.sql.catalyst.expressions
-        .BloomFilterMightContain(exprs.head, exprs(1)),
-      "scala_udf")
-  }
+  import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain => MightContain}
+  import org.apache.spark.sql.catalyst.expressions.aggregate.{BloomFilterAggregate => BloomAgg}
+
+  /** The one function table: (SQL name, implementing class, builder).
+    * Both install paths — [[register]] and [[GraftExtensions]] — read
+    * it, so they cannot drift apart. */
+  private[functions] val table: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
+    ("cosine_f32", classOf[CosineSimF32], e => CosineSimF32(e.head, e(1))),
+    ("topk_by_score", classOf[TopKByScore], TopKByScore.fromExprs),
+    ("freq_sketch", classOf[FreqSketch], FreqSketch.fromExprs),
+    ("l2sq_f32", classOf[L2SqF32], e => L2SqF32(e.head, e(1))),
+    ("dtw_i64", classOf[DtwI64], e => DtwI64(e.head, e(1))),
+    ("bloom_filter_agg", classOf[BloomAgg], e => new BloomAgg(e.head, e(1), e(2))),
+    ("bloom_might_contain", classOf[MightContain], e => new MightContain(e.head, e(1))))
+
+  def register(spark: SparkSession): Unit =
+    table.foreach { case (name, _, builder) =>
+      spark.sessionState.functionRegistry
+        .createOrReplaceTempFunction(name, builder, "scala_udf")
+    }
 }
 
 /** `SparkSessionExtensions` hook: enable with
@@ -115,45 +113,13 @@ object GraftFunctions {
   * equivalents (GraftFunctions.register / plans.AsOf.register). */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("cosine_f32"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[CosineSimF32].getName, "cosine_f32"),
-      (exprs: Seq[Expression]) => CosineSimF32(exprs.head, exprs(1))))
-    ext.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("topk_by_score"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[TopKByScore].getName, "topk_by_score"),
-      (exprs: Seq[Expression]) => TopKByScore.fromExprs(exprs)))
-    ext.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("freq_sketch"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[FreqSketch].getName, "freq_sketch"),
-      (exprs: Seq[Expression]) => FreqSketch.fromExprs(exprs)))
-    ext.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("l2sq_f32"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[L2SqF32].getName, "l2sq_f32"),
-      (exprs: Seq[Expression]) => L2SqF32(exprs.head, exprs(1))))
-    ext.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("bloom_filter_agg"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate].getName,
-        "bloom_filter_agg"),
-      (exprs: Seq[Expression]) => new org.apache.spark.sql.catalyst.expressions.aggregate
-        .BloomFilterAggregate(exprs.head, exprs(1), exprs(2))))
-    ext.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("bloom_might_contain"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain].getName,
-        "bloom_might_contain"),
-      (exprs: Seq[Expression]) => new org.apache.spark.sql.catalyst.expressions
-        .BloomFilterMightContain(exprs.head, exprs(1))))
-    ext.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("dtw_i64"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[DtwI64].getName, "dtw_i64"),
-      (exprs: Seq[Expression]) => DtwI64(exprs.head, exprs(1))))
+    GraftFunctions.table.foreach { case (name, cls, builder) =>
+      ext.injectFunction((
+        new org.apache.spark.sql.catalyst.FunctionIdentifier(name),
+        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
+          cls.getName, name),
+        builder))
+    }
     ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
     ext.injectOptimizerRule(_ => graft.plans.PushFilterThroughAsOfJoin)
   }

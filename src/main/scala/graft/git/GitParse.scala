@@ -45,10 +45,6 @@ object GitParse {
   private def try_cast_long(c: Column): Column =
     when(c.rlike("^-?[0-9]+$"), c.cast("long"))
 
-  // ---- P12: repo name from path (src/git-parser.ts:54-55) -----------------
-  def repoNameFromPath(path: Column): Column =
-    element_at(split(regexp_replace(path, "/+$", ""), "/"), -1)
-
   // ---- P13: file extension, reject no-dot names (src/git-parser.ts:227-230)
   /** Reference semantics exactly: split the whole path on '.', take the last
     * segment lowercased; a path with no '.' yields null (ext == file check). */

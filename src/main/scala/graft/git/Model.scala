@@ -1,48 +1,5 @@
 package graft.git
 
-import java.sql.Timestamp
-
-/** Typed records for the git extraction layer (SURVEY §1.1; reference
-  * interfaces at /root/reference/src/git-parser.ts:1-43). Counts are Long
-  * (not Int) per SURVEY §1.3 — the 100 TB north star.
-  */
-final case class FileChange(filePath: String, additions: Long, deletions: Long)
-
-final case class GitCommit(
-    repoName: String,
-    sha: String,
-    authorEmail: String,
-    authorName: String,
-    committedAt: Timestamp,
-    message: String,
-    branch: String,
-    isMerge: Boolean,
-    additions: Long,
-    deletions: Long,
-    filesChanged: Long,
-    fileChanges: Seq[FileChange])
-
-final case class GitTag(
-    repoName: String,
-    tagName: String,
-    sha: String,
-    isAnnotated: Boolean,
-    taggerName: Option[String],
-    taggerEmail: Option[String],
-    tagDate: Option[Timestamp],
-    message: Option[String])
-
+/** A repository the extractor reads: its name, filesystem path and the
+  * branch `git log` walks (resolved by [[GitCli.repoInfo]]). */
 final case class RepoInfo(name: String, path: String, branch: String)
-
-/** Schema-only in the reference (/root/reference/db/schema.ts:29-52 — no
-  * insert path exists; README.md:112). Declared for completeness, never
-  * populated (SURVEY §7.5 #7). */
-final case class PullRequest(
-    repoName: String,
-    prNumber: Long,
-    title: String,
-    author: String,
-    createdAt: Timestamp,
-    mergedAt: Option[Timestamp],
-    state: String,
-    timeToMergeHours: Option[Double])

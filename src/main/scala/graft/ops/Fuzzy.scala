@@ -26,15 +26,6 @@ import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
   */
 object Fuzzy {
 
-  /** Edge-count ceiling for the driver-side union-find tier of
-    * [[resolveClusters]]. The collected edges materialize as boxed Rows
-    * then tuples (~100 B/edge transient, not 16 B): 2M edges ≈ 200 MB of
-    * short-lived driver heap — safe on any real driver, far above
-    * anything a vocabulary-level graph should produce. Above it the SAME
-    * pairs go to the distributed min-label CC instead of silently OOMing
-    * the driver. */
-  val DriverClosureMaxEdges: Long = 2_000_000L
-
   /** Transitive closure with TIER SELECTION AS CODE, not authorship:
     * count the (deduped) edge list first; at or below `driverMaxEdges`
     * run a driver union-find (a vocabulary-level graph is sublinear in
@@ -50,42 +41,20 @@ object Fuzzy {
     * Input: (doc_a, doc_b) Long pairs. Output: (doc_id, cluster_id),
     * driver tier pre-broadcast (vocabulary-sized by construction). */
   def resolveClusters(spark: SparkSession, edgesIn: DataFrame,
-      driverMaxEdges: Long = DriverClosureMaxEdges): DataFrame = {
+      driverMaxEdges: Long = Graph.DriverMaxEdges): DataFrame = {
     val edges = edgesIn.select(col("doc_a").cast("long").as("doc_a"),
       col("doc_b").cast("long").as("doc_b"))
-    // ONE bounded job decides the tier AND fetches the driver tier's
-    // edges: collect through limit(max+1) — at most max+1 rows ever
-    // reach the driver (the same bound the old count()-then-collect()
-    // enforced, minus one full pass and a persist). Getting max+1 rows
-    // back means "over the bound" and routes to the distributed tier.
-    // This runs once per streaming TRIGGER via ccFold, where the extra
-    // count job was pure per-trigger fixed cost (optimization guide
-    // §1.2: remove passes before tuning anything else).
-    val cap = (math.min(driverMaxEdges, Int.MaxValue.toLong - 1) + 1).toInt
-    val probe = edges.limit(cap).collect()
-    if (probe.length <= driverMaxEdges) {
-      val edgeList = probe.map(r => (r.getLong(0), r.getLong(1)))
-      val parent = scala.collection.mutable.Map.empty[Long, Long]
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
-        var c = x
-        while (parent.getOrElse(c, c) != c) { val nxt = parent(c); parent(c) = r; c = nxt }
-        r
-      }
-      edgeList.foreach { case (a, b) =>
-        parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-      }
-      val labels = parent.keys.toSeq.map(n => (n, find(n)))
-      val minOfComp = labels.groupBy(_._2).map { case (root, ms) =>
-        root -> ms.map(_._1).min
-      }
-      broadcast(spark.createDataFrame(
-          labels.map { case (n, root) => (n, minOfComp(root)) })
+    // ONE bounded probe decides the tier AND fetches the driver tier's
+    // edges ([[Graph.tiered]]). This runs once per streaming TRIGGER via
+    // ccFold, where a separate count job was pure per-trigger fixed cost
+    // (optimization guide §1.2: remove passes before tuning anything
+    // else).
+    Graph.tiered(edges, Seq("doc_a", "doc_b"), driverMaxEdges) { probe =>
+      val uf = new Graph.MinUnionFind
+      probe.foreach(r => uf.union(r.getLong(0), r.getLong(1)))
+      broadcast(spark.createDataFrame(uf.nodes.toSeq.map(n => (n, uf.find(n))))
         .toDF("doc_id", "cluster_id"))
-    } else {
+    } {
       // Distributed tier: sever the edge list's lineage first — callers
       // (ccFold especially) hand in plans that embed whole CC-loop or
       // day-1 lineages, and connectedComponents references its input
@@ -266,7 +235,7 @@ object Fuzzy {
     * label-propagation rounds' fixed job overhead (measured: 20 s →
     * ~2 s at sf0.1). But "vocabulary-bounded" is a checked invariant,
     * not a comment: resolveClusters counts the edge list first and
-    * routes anything past DriverClosureMaxEdges to the distributed CC
+    * routes anything past Graph.DriverMaxEdges to the distributed CC
     * (q47/q62's min-label loop) with identical min-member labels.
     * Picking the right tier per MEASURED graph size IS the scale design. */
   val q179EntityResolution: Q = Q(

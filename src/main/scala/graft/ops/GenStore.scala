@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** The seq-numbered pointer-file protocol shared by every store in the
   * repo, and the writer lease that guards it.
@@ -152,7 +153,7 @@ private[graft] object GenStore {
     } catch {
       // Unreadable/partial lease (holder died mid-write, or it vanished
       // between the failed create and this read): treat as abandoned.
-      case _: Throwable => ("<unreadable>", 0L)
+      case NonFatal(_) => ("<unreadable>", 0L)
     }
 
   /** Effective lease epoch: the LATER of the epoch recorded in the file
@@ -167,7 +168,7 @@ private[graft] object GenStore {
     * stale one). */
   private def leaseEpoch(fs: FileSystem, lease: Path, contentEpoch: Long): Long =
     try math.max(contentEpoch, fs.getFileStatus(lease).getModificationTime)
-    catch { case _: Throwable => contentEpoch }
+    catch { case NonFatal(_) => contentEpoch }
 
   /** Acquire the maintenance writer lease, making the single-writer
     * contract ENFORCED rather than documented: the realistic day-2
@@ -389,7 +390,7 @@ private[graft] object GenStore {
         // dead heartbeat silently re-opens the slow-run takeover.
         if (!stop.get())
           try lease.renew()
-          catch { case _: Throwable => () }
+          catch { case NonFatal(_) => () }
       }
     }, s"graft-lease-heartbeat-$owner")
     hb.setDaemon(true)

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.{Q, Tables}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Graph analytics over relational co-occurrence — the connected-components
@@ -46,9 +47,11 @@ object Graph {
         col("r.k").as(keyOut), col("r.s").as(scoreOut))
       .orderBy(col("pos"))
 
-  /** The co-purchase edge set both graph kernels run on: part pairs
-    * co-occurring in ≥ 2 DISTINCT orders. The support threshold is what
-    * keeps the graph analyzable at scale — raw single-order co-occurrence
+  /** The co-purchase edge set the graph kernels run on: part pairs
+    * co-occurring in ≥ 2 DISTINCT orders, weighted by that support
+    * (u < v, w = number of shared orders — the weighted-LPA oracle's e0
+    * verbatim). The support threshold is what keeps the graph
+    * analyzable at scale — raw single-order co-occurrence
     * over a bounded part catalog densifies toward the complete graph as
     * orders accumulate (at sf0.1 it is already 1.2M edges over 20k parts,
     * 99.7% of them support-1 noise), and dense graphs make every
@@ -58,7 +61,7 @@ object Graph {
     * "bought together more than once" affinity signal the kernels are
     * meant to run on. One groupBy builds it; map-side partial counts
     * bound the shuffle by distinct pairs, not co-occurrence rows. */
-  private[graft] def supportedEdges(s: org.apache.spark.sql.SparkSession, dir: String) = {
+  private[graft] def coPurchaseEdges(s: SparkSession, dir: String): DataFrame = {
     // Distinct (order, part) FIRST: pair rows are then unique per order by
     // construction, so support is a plain count — no count-distinct
     // expand over the (much larger) co-occurrence rows.
@@ -68,9 +71,62 @@ object Graph {
         col("l1.l_orderkey") === col("l2.l_orderkey") &&
           col("l1.l_partkey") < col("l2.l_partkey"))
       .groupBy(col("l1.l_partkey").as("u"), col("l2.l_partkey").as("v"))
-      .agg(count(lit(1)).as("supp"))
-      .filter(col("supp") >= 2)
-      .select(col("u"), col("v"))
+      .agg(count(lit(1)).as("w"))
+      .filter(col("w") >= 2)
+  }
+
+  /** [[coPurchaseEdges]] without the weight: the unweighted (u, v) graph. */
+  private[graft] def supportedEdges(s: SparkSession, dir: String): DataFrame =
+    coPurchaseEdges(s, dir).select(col("u"), col("v"))
+
+  /** Edge-count ceiling for the driver tier of every tiered graph kernel
+    * ([[tiered]]). The collected edges materialize as boxed Rows then
+    * tuples (~100 B/edge transient, not 16 B): 2M edges ≈ 200 MB of
+    * short-lived driver heap — safe on any real driver, far above
+    * anything a vocabulary-level graph should produce. Above it the SAME
+    * edges go to the kernel's distributed tier instead of silently
+    * OOMing the driver. */
+  val DriverMaxEdges: Long = 2_000_000L
+
+  /** Tier selection AS CODE, not authorship: ONE bounded job decides the
+    * tier AND fetches the driver tier's edges. `cols` of `edges` are
+    * collected through limit(max+1) — at most max+1 rows ever reach the
+    * driver (the bound a count()-then-collect() would enforce, minus one
+    * full pass over the edge lineage). At most `driverMaxEdges` rows back
+    * runs `driver` on them; max+1 rows means "over the bound" and runs
+    * `distributed` instead. The cap saturates below Int.MaxValue, so any
+    * bound up to Long.MaxValue is safe. Callers cut their own lineage
+    * (localCheckpoint/persist) where their distributed loop needs it. */
+  private[graft] def tiered[A](edges: DataFrame, cols: Seq[String],
+      driverMaxEdges: Long = DriverMaxEdges)(driver: Array[Row] => A)(
+      distributed: => A): A = {
+    val cap = (math.min(driverMaxEdges, Int.MaxValue.toLong - 1) + 1).toInt
+    val probe = edges.select(cols.map(col): _*).limit(cap).collect()
+    if (probe.length <= driverMaxEdges) driver(probe) else distributed
+  }
+
+  /** Min-root union-find with path compression for the driver tiers.
+    * A union always hangs the larger root under the smaller one, so
+    * every root is the minimum member of its set and `find(x)` IS x's
+    * component-min label — the same label the distributed min-label
+    * fixpoints produce. */
+  private[graft] final class MinUnionFind {
+    private val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = {
+      var r = x
+      while (parent.getOrElse(r, r) != r) r = parent(r)
+      var c = x
+      while (parent.getOrElse(c, c) != c) { val nx = parent(c); parent(c) = r; c = nx }
+      r
+    }
+    /** Merge the sets of `a` and `b`, registering both as nodes. */
+    def union(a: Long, b: Long): Unit = {
+      parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    /** Every node passed to [[union]]. */
+    def nodes: Iterable[Long] = parent.keys
   }
 
   /** q106: triangles in the part co-purchase graph (two parts linked when
@@ -903,7 +959,7 @@ object Graph {
          |SELECT c.community, c.n_members, t.n_communities
          |FROM comm c, t
          |ORDER BY c.n_members DESC, c.community LIMIT 20""".stripMargin) { (s, dir) =>
-      val (_, _, l) = lpaRun(s, dir)
+      val l = lpa(supportedEdges(s, dir), count(lit(1)))
       import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
       val comm = l.groupBy(col("lbl").as("community"))
         .agg(count(lit(1)).as("n_members"))
@@ -935,28 +991,38 @@ object Graph {
        |$duckRounds""".stripMargin
   }
 
-  /** Spark side of the shared LPA machinery: (support-2 edges, persisted
-    * adjacency, round-4 labels). */
-  private def lpaRun(s: org.apache.spark.sql.SparkSession, dir: String)
-      : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame,
-         org.apache.spark.sql.DataFrame) = {
-    import org.apache.spark.sql.expressions.Window
+  /** The deterministic 4-round label propagation kernel every LPA query
+    * shares: synchronous rounds from the canonical own-id init, each
+    * node adopting the neighbor label with the largest `vote` mass, ties
+    * to the smaller label. `vote` aggregates over the adjacency rows a
+    * node sees for one label: `count(lit(1))` is plain LPA (q354/q412),
+    * `sum(col("w"))` weighted LPA over (u, v, w) edges (q423/q431). The
+    * kernel is COMPONENT-LOCAL (a node's round-i label depends only on
+    * its component's round-(i−1) labels; no global constants), which is
+    * what qualifies it for [[Round14.componentFold]]. Edges (u, v, ...)
+    * are checkpointed first — the rounds re-read them, and streaming
+    * folds hand in deep lineages. Returns (n, lbl) after round 4. */
+  private[graft] def lpa(edges: DataFrame, vote: Column): DataFrame = {
     import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val e0 = supportedEdges(s, dir).persist(MEMORY_AND_DISK)
-    val adj = e0.select(col("u").as("n"), col("v").as("z"))
-      .unionAll(e0.select(col("v").as("n"), col("u").as("z")))
+    val e = edges.localCheckpoint()
+    val rest = e.columns.filterNot(Set("u", "v")).map(col).toSeq
+    val adj = e.select(col("u").as("n") +: col("v").as("z") +: rest: _*)
+      .unionAll(e.select(col("v").as("n") +: col("u").as("z") +: rest: _*))
       .persist(MEMORY_AND_DISK) // probed every round
     var l = adj.select(col("n")).distinct().withColumn("lbl", col("n"))
     for (_ <- 1 to 4) {
-      // (max count, min label) per node as ONE hash aggregate — same
-      // deterministic argmax as the old rank-1 window, minus the
-      // per-round partition sort (see Round14.lpa4).
+      // (max vote, min label) per node as ONE hash aggregate: max_by
+      // over the (c, -lbl) struct ≡ a row_number()-over-(c DESC, lbl)
+      // rk=1 pick — (c, -lbl) is unique per (n, lbl), so the argmax is
+      // deterministic — without the window's per-round partition SORT
+      // (guide §2.4: an aggregate keyed the same way needs no second
+      // ordering pass). Runs per streaming trigger in q419's fold.
       l = adj.join(l.withColumnRenamed("n", "z"), "z")
-        .groupBy(col("n"), col("lbl")).agg(count(lit(1)).as("c"))
+        .groupBy(col("n"), col("lbl")).agg(vote.as("c"))
         .groupBy(col("n"))
         .agg(max_by(col("lbl"), struct(col("c"), -col("lbl"))).as("lbl"))
     }
-    (e0, adj, l)
+    l
   }
 
   /** q382: personalized (seed-teleport) PageRank — q109 ranks GLOBAL
@@ -1196,9 +1262,10 @@ object Graph {
        |FROM mm, qn""".stripMargin) { (s, dir) =>
     import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val dec = "decimal(38,0)"
-    val (e0, adj, l4) = lpaRun(s, dir)
-    val lp = l4.persist(MEMORY_AND_DISK)
-    val deg = adj.groupBy(col("n")).agg(count(lit(1)).as("d"))
+    val e0 = supportedEdges(s, dir).persist(MEMORY_AND_DISK)
+    val lp = lpa(e0, count(lit(1))).persist(MEMORY_AND_DISK)
+    val deg = e0.select(col("u").as("n")).unionAll(e0.select(col("v").as("n")))
+      .groupBy(col("n")).agg(count(lit(1)).as("d"))
     val mm = e0.agg(count(lit(1)).as("m"))
     val dc = lp.join(deg, "n").groupBy(col("lbl"))
       .agg(sum(col("d")).as("dsum"))

@@ -248,23 +248,16 @@ object Round13 {
         coalesce(col("truss"), lit(2L)).as("truss"))
   }
 
-  /** Tier choice, CHECKED not assumed (the [[Fuzzy.resolveClusters]]
-    * contract): count the edges first; at or below `driverMaxEdges` run
-    * the in-heap peel, above it the distributed wedge-join peel. Both
-    * tiers produce identical truss numbers (Round13Spec races them on
-    * the same graphs). */
+  /** Tier choice, CHECKED not assumed ([[Graph.tiered]]): at or below
+    * `driverMaxEdges` edges run the in-heap peel, above it the
+    * distributed wedge-join peel. Both tiers produce identical truss
+    * numbers (Round13Spec races them on the same graphs). */
   private[graft] def trussTiered(s: SparkSession, e0: DataFrame,
-      driverMaxEdges: Long = 2000000L): DataFrame = {
-    // ONE bounded job decides the tier AND fetches the driver tier's
-    // edges (limit(max+1) ≡ count-then-collect's bound, minus a full
-    // recompute of the edge lineage — the Fuzzy.resolveClusters fuse).
-    val cap = (math.min(driverMaxEdges, Int.MaxValue.toLong - 1) + 1).toInt
-    val probe = e0.select(col("u"), col("v")).limit(cap).collect()
-    if (probe.length <= driverMaxEdges) {
+      driverMaxEdges: Long = Graph.DriverMaxEdges): DataFrame =
+    Graph.tiered(e0, Seq("u", "v"), driverMaxEdges) { probe =>
       val rows = trussDriver(probe.map(r => (r.getLong(0), r.getLong(1))))
       s.createDataFrame(rows).toDF("u", "v", "truss")
-    } else trussDistributed(e0)
-  }
+    }(trussDistributed(e0))
 
   /** q396: k-TRUSS DECOMPOSITION — the cohesion decomposition q388's
     * per-edge support is the precursor of: repeatedly drop edges in
@@ -778,14 +771,7 @@ object Round13 {
       |SELECT CAST(row_number() OVER (ORDER BY r DESC, nd) AS BIGINT) AS pos,
       |       nd AS n, CAST(r AS BIGINT) AS r
       |FROM r3 QUALIFY pos <= 20 ORDER BY pos""".stripMargin) { (s, dir) =>
-    val l = Tables(s, dir, "lineitem")
-      .select(col("l_orderkey"), col("l_partkey")).distinct()
-    val ew = l.as("l1").join(l.as("l2"),
-        col("l1.l_orderkey") === col("l2.l_orderkey") &&
-          col("l1.l_partkey") < col("l2.l_partkey"))
-      .groupBy(col("l1.l_partkey").as("u"), col("l2.l_partkey").as("v"))
-      .agg(count(lit(1)).as("w"))
-      .filter(col("w") >= 2)
+    val ew = Graph.coPurchaseEdges(s, dir)
     val sym = ew.unionAll(
       ew.select(col("v").as("u"), col("u").as("v"), col("w")))
     val swt = sym.groupBy(col("u")).agg(sum(col("w")).as("sw"))

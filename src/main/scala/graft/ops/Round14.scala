@@ -95,31 +95,26 @@ object Round14 {
       .unionByName(cur.select(col("v").as("n"))).distinct()
   }
 
-  /** Tier choice, CHECKED not assumed (the shared 2M-edge boundary):
-    * count first, in-heap below, distributed above. Both tiers produce
+  /** Tier choice, CHECKED not assumed ([[Graph.tiered]]): in-heap at or
+    * below the edge bound, distributed above. Both tiers produce
     * identical survivor sets (Round14Spec races them). Returns (n,
     * in_core3) over every endpoint of `edges`. */
   private[graft] def core3Members(s: SparkSession, edges: DataFrame,
       cap: Int = Core3RoundCap,
-      driverMaxEdges: Long = 2000000L): DataFrame = {
+      driverMaxEdges: Long = Graph.DriverMaxEdges): DataFrame = {
     // The edge list is re-read every peel round; sever whatever lineage
     // produced it (q383's meta-graph lesson — an upstream CC loop in the
     // lineage makes the per-round plan string grow exponentially).
     val e = edges.select(col("u"), col("v")).localCheckpoint()
     val nodes = e.select(col("u").as("n"))
       .unionByName(e.select(col("v").as("n"))).distinct()
-    // ONE bounded job decides the tier and fetches the driver tier's
-    // edges (limit(max+1) ≡ the old count-then-collect bound, minus a
-    // full pass — per-trigger fixed cost in q411's streaming fold).
-    val capN = (math.min(driverMaxEdges, Int.MaxValue.toLong - 1) + 1).toInt
-    val probe = e.limit(capN).collect()
     val surv: DataFrame =
-      if (probe.length <= driverMaxEdges) {
+      Graph.tiered(e, Seq("u", "v"), driverMaxEdges) { probe =>
         val core = core3Driver(
           probe.map(r => (r.getLong(0), r.getLong(1))), cap)
         if (core.isEmpty) s.range(0).select(col("id").as("n"))
         else s.createDataFrame(core.toSeq.map(Tuple1(_))).toDF("n")
-      } else core3Distributed(e, cap)
+      }(core3Distributed(e, cap))
     nodes.join(surv.select(col("n"), lit(true).as("c")), Seq("n"), "left")
       .select(col("n"), coalesce(col("c"), lit(false)).as("in_core3"))
   }
@@ -773,19 +768,14 @@ object Round14 {
       .select(col("n"), coalesce(col("mx"), lit(1L)).as("core_number"))
   }
 
-  /** Tier choice, CHECKED not assumed (the shared 2M-edge boundary). */
+  /** Tier choice, CHECKED not assumed ([[Graph.tiered]]). */
   private[graft] def coreTiered(s: SparkSession, e0: DataFrame,
-      driverMaxEdges: Long = 2000000L): DataFrame = {
-    // ONE bounded job decides the tier and fetches the driver tier's
-    // edges (see Fuzzy.resolveClusters).
-    val cap = (math.min(driverMaxEdges, Int.MaxValue.toLong - 1) + 1).toInt
-    val probe = e0.select(col("u"), col("v")).limit(cap).collect()
-    if (probe.length <= driverMaxEdges)
+      driverMaxEdges: Long = Graph.DriverMaxEdges): DataFrame =
+    Graph.tiered(e0, Seq("u", "v"), driverMaxEdges) { probe =>
       s.createDataFrame(coreDriver(
         probe.map(r => (r.getLong(0), r.getLong(1)))))
         .toDF("n", "core_number")
-    else coreDistributed(e0)
-  }
+    }(coreDistributed(e0))
 
   /** The unrolled decomposition oracle: for each k in [[CoreSchedule]],
     * `cap` node-peel rounds chained from the previous k's fixpoint, all
@@ -846,34 +836,6 @@ object Round14 {
   // q412 — component-grain incremental LPA
   // -------------------------------------------------------------------
 
-  /** q354's deterministic 4-round LPA from the canonical init (label =
-    * own id; per round take the (max count, min label) neighbor label),
-    * over an arbitrary edge set — the kernel is COMPONENT-LOCAL (a
-    * node's round-i label depends only on its component's round-(i−1)
-    * labels; no global constants), which is exactly what qualifies it
-    * for [[componentFold]]. Returns (n, lbl). */
-  private[graft] def lpa4(edges: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val e = edges.select(col("u"), col("v")).localCheckpoint()
-    val adj = e.select(col("u").as("n"), col("v").as("z"))
-      .unionAll(e.select(col("v").as("n"), col("u").as("z")))
-      .persist(MEMORY_AND_DISK) // probed every round
-    var l = adj.select(col("n")).distinct().withColumn("lbl", col("n"))
-    for (_ <- 1 to 4) {
-      // (max count, min label) per node as ONE hash aggregate: max_by
-      // over the (c, -lbl) struct ≡ the old row_number()-over-(c DESC,
-      // lbl) rk=1 pick — (c, -lbl) is unique per (n, lbl), so the argmax
-      // is deterministic — without the window's per-round partition SORT
-      // (guide §2.4: an aggregate keyed the same way needs no second
-      // ordering pass). Runs per streaming trigger in q419.
-      l = adj.join(l.withColumnRenamed("n", "z"), "z")
-        .groupBy(col("n"), col("lbl")).agg(count(lit(1)).as("c"))
-        .groupBy(col("n"))
-        .agg(max_by(col("lbl"), struct(col("c"), -col("lbl"))).as("lbl"))
-    }
-    l
-  }
-
   /** q412: COMPONENT-GRAIN incremental LPA — the second kernel through
     * [[componentFold]], proving the discipline is generic and not a
     * 3-core special case: q354's deterministic 4-round label
@@ -904,8 +866,9 @@ object Round14 {
       day1.select(col("u").as("doc_a"), col("v").as("doc_b")))
       .select(col("doc_id").as("n"), col("cluster_id").as("lab"))
       .persist(MEMORY_AND_DISK)
-    val stored = lpa4(day1)
-    val (updated, _, _) = componentFold(labels, stored, day1, delta)(lpa4)
+    val lpa = Graph.lpa(_: DataFrame, count(lit(1)))
+    val stored = lpa(day1)
+    val (updated, _, _) = componentFold(labels, stored, day1, delta)(lpa)
     updated.select(col("n"), col("lbl")).orderBy(col("n"))
   }
 

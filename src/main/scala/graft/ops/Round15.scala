@@ -386,19 +386,9 @@ object Round15 {
       else {
         best.values.foreach(mst += _)
         // Min-label union over the selected edges at LABEL grain.
-        val par = scala.collection.mutable.Map.empty[Long, Long]
-        def find(x: Long): Long = {
-          var r = x
-          while (par.getOrElse(r, r) != r) r = par(r)
-          var c = x
-          while (par.getOrElse(c, c) != c) { val nx = par(c); par(c) = r; c = nx }
-          r
-        }
-        best.values.foreach { case (u, v, _) =>
-          val a = find(lab(u)); val b = find(lab(v))
-          if (a != b) par(math.max(a, b)) = math.min(a, b)
-        }
-        lab.keys.toSeq.foreach(n => lab(n) = find(lab(n)))
+        val uf = new Graph.MinUnionFind
+        best.values.foreach { case (u, v, _) => uf.union(lab(u), lab(v)) }
+        lab.keys.toSeq.foreach(n => lab(n) = uf.find(lab(n)))
       }
     }
     mst.toSeq
@@ -491,24 +481,21 @@ object Round15 {
     else selected.reduce(_ unionByName _).distinct()
   }
 
-  /** Tier choice, CHECKED not assumed (the shared 2M-edge boundary). */
+  /** Tier choice, CHECKED not assumed ([[Graph.tiered]]). */
   private[graft] def boruvkaTiered(s: SparkSession, e0: DataFrame,
-      driverMaxEdges: Long = 2000000L): DataFrame = {
+      driverMaxEdges: Long = Graph.DriverMaxEdges): DataFrame = {
     import s.implicits._
-    // ONE bounded job decides the tier and fetches the driver tier's
-    // edges (see Fuzzy.resolveClusters); the distributed tier
-    // checkpoints before looping, exactly where the cut pays.
-    val cap = (math.min(driverMaxEdges, Int.MaxValue.toLong - 1) + 1).toInt
-    val probe = e0.select(col("u"), col("v"), col("w")).limit(cap).collect()
-    if (probe.length <= driverMaxEdges) {
+    // The distributed tier checkpoints before looping, exactly where the
+    // cut pays.
+    Graph.tiered(e0, Seq("u", "v", "w"), driverMaxEdges) { probe =>
       val rows = boruvkaDriver(
         probe.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))))
       if (rows.isEmpty)
         s.range(0).select(col("id").as("u"), col("id").as("v"),
           col("id").as("w"))
       else rows.toDF("u", "v", "w")
-    } else boruvkaDistributed(
-      e0.select(col("u"), col("v"), col("w")).localCheckpoint())
+    }(boruvkaDistributed(
+      e0.select(col("u"), col("v"), col("w")).localCheckpoint()))
   }
 
   /** The unrolled Borůvka oracle: [[MstSchedule]].length rounds, each
@@ -579,7 +566,7 @@ object Round15 {
     * per round. */
   val q420BoruvkaMsf: Q = Q(
     "q420_boruvka_msf", boruvkaOracle) { (s, dir) =>
-    val e0 = weightedEdges(s, dir)
+    val e0 = Graph.coPurchaseEdges(s, dir)
     boruvkaTiered(s, e0).orderBy(col("u"), col("v"))
   }
 
@@ -609,7 +596,7 @@ object Round15 {
   val q421MsfIncremental: Q = Q(
     "q421_msf_incremental",
     q420BoruvkaMsf.oracle.get) { (s, dir) =>
-    val e0 = weightedEdges(s, dir)
+    val e0 = Graph.coPurchaseEdges(s, dir)
       .persist(MEMORY_AND_DISK)
     val day1 = e0.filter((col("u") + col("v")) % 5 =!= 0)
       .persist(MEMORY_AND_DISK)
@@ -661,7 +648,7 @@ object Round15 {
           |       nn.n - lv.kept AS n_clusters, lv.affinity AS total_affinity
           |FROM lv, nn ORDER BY threshold""".stripMargin
     }) { (s, dir) =>
-    val e0 = weightedEdges(s, dir)
+    val e0 = Graph.coPurchaseEdges(s, dir)
       .persist(MEMORY_AND_DISK)
     val forest = boruvkaTiered(s, e0).localCheckpoint()
     val nn = e0.select(col("u").as("x"))
@@ -684,45 +671,6 @@ object Round15 {
   // -------------------------------------------------------------------
   // q423 — weighted label propagation
   // -------------------------------------------------------------------
-
-  /** q423: WEIGHTED LPA — q354's deterministic 4-round label propagation
-    * with the co-purchase SUPPORT as the vote weight: per round a node
-    * takes the label with the largest incident-support SUM (ties to the
-    * smaller label) instead of the largest neighbor COUNT — communities
-    * then follow affinity mass, not raw degree (a node bridging two
-    * communities lands with the one it co-purchases with MORE, the
-    * standard weighted-LPA refinement). Pure integer weights, so the
-    * argmax is exact in both engines; same synchronous-rounds metric as
-    * q354 (4 rounds from the canonical own-id init).
-    *
-    * Scale shape: q354's exactly — per round one edge-grain shuffle of
-    * the adjacency (now carrying w) joined to the label table + a
-    * per-node bounded windowed argmax; rounds are data-independent. */
-  /** The 4-round WEIGHTED LPA kernel: q354's synchronous rounds with the
-    * edge weight as the vote mass (argmax by incident-support SUM, ties
-    * to the smaller label), from the canonical own-id init. Edges
-    * (u, v, w); returns (n, lbl) after round 4. Component-local with no
-    * global constants — weights ride the edges — so it qualifies for
-    * [[Round14.componentFold]] exactly like count-LPA (q412). */
-  private[graft] def wlpa4(edges: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val e = edges.select(col("u"), col("v"), col("w")).localCheckpoint()
-    val adj = e.select(col("u").as("n"), col("v").as("z"), col("w"))
-      .unionAll(e.select(col("v").as("n"), col("u").as("z"), col("w")))
-      .persist(MEMORY_AND_DISK) // probed every round
-    var l = adj.select(col("n")).distinct().withColumn("lbl", col("n"))
-    for (_ <- 1 to 4) {
-      // (max weight-sum, min label) per node as ONE hash aggregate —
-      // same deterministic argmax as the old rank-1 window, minus the
-      // per-round partition sort (see Round14.lpa4). Runs per streaming
-      // trigger in q431's fold and at q444's setup.
-      l = adj.join(l.withColumnRenamed("n", "z"), "z")
-        .groupBy(col("n"), col("lbl")).agg(sum(col("w")).as("c"))
-        .groupBy(col("n"))
-        .agg(max_by(col("lbl"), struct(col("c"), -col("lbl"))).as("lbl"))
-    }
-    l
-  }
 
   /** The weighted-LPA oracle CTE chain (lp → weighted e0 → adj → l0..l4)
     * shared by q423's community epilogue and q431's node-grain fold
@@ -750,19 +698,19 @@ object Round15 {
       |$duckRounds""".stripMargin
   }
 
-  /** The weighted support-2 co-purchase edge build shared by
-    * q420/q421/q422/q423/q431 (the oracle's e0 verbatim). */
-  private[graft] def weightedEdges(s: SparkSession, dir: String): DataFrame = {
-    val lp = Tables(s, dir, "lineitem")
-      .select(col("l_orderkey"), col("l_partkey")).distinct()
-    lp.as("l1").join(lp.as("l2"),
-        col("l1.l_orderkey") === col("l2.l_orderkey") &&
-          col("l1.l_partkey") < col("l2.l_partkey"))
-      .groupBy(col("l1.l_partkey").as("u"), col("l2.l_partkey").as("v"))
-      .agg(count(lit(1)).as("w"))
-      .filter(col("w") >= 2)
-  }
-
+  /** q423: WEIGHTED LPA — q354's deterministic 4-round label propagation
+    * with the co-purchase SUPPORT as the vote weight: per round a node
+    * takes the label with the largest incident-support SUM (ties to the
+    * smaller label) instead of the largest neighbor COUNT — communities
+    * then follow affinity mass, not raw degree (a node bridging two
+    * communities lands with the one it co-purchases with MORE, the
+    * standard weighted-LPA refinement). Pure integer weights, so the
+    * argmax is exact in both engines; same synchronous-rounds metric as
+    * q354 (4 rounds from the canonical own-id init).
+    *
+    * Scale shape: q354's exactly — per round one edge-grain shuffle of
+    * the adjacency (now carrying w) joined to the label table + a
+    * per-node bounded windowed argmax; rounds are data-independent. */
   val q423WeightedLpa: Q =
     Q("q423_weighted_lpa",
       s"""WITH $duckWlpa,
@@ -774,7 +722,7 @@ object Round15 {
         |FROM comm c, t
         |ORDER BY c.n_members DESC, c.community LIMIT 20""".stripMargin) {
       (s, dir) =>
-      val l = wlpa4(weightedEdges(s, dir))
+      val l = Graph.lpa(Graph.coPurchaseEdges(s, dir), sum(col("w")))
       val comm = l.groupBy(col("lbl").as("community"))
         .agg(count(lit(1)).as("n_members"))
         .persist(MEMORY_AND_DISK)
@@ -1628,8 +1576,9 @@ object Round15 {
   // q431 — component-grain incremental WEIGHTED LPA
   // -------------------------------------------------------------------
 
-  /** q431: COMPONENT-GRAIN incremental WEIGHTED LPA — [[wlpa4]] through
-    * the generic [[Round14.componentFold]]: the first WEIGHTED kernel
+  /** q431: COMPONENT-GRAIN incremental WEIGHTED LPA — [[Graph.lpa]]
+    * with a `sum(w)` vote through the generic [[Round14.componentFold]]:
+    * the first WEIGHTED kernel
     * through the fold, proving the discipline indifferent to edge
     * payloads (the touched-edge semi-join and the day1 ∪ delta union
     * carry w through untouched; the kernel's vote mass is edge-local,
@@ -1647,7 +1596,7 @@ object Round15 {
     "q431_wlpa_incremental",
     s"""WITH $duckWlpa
       |SELECT n, lbl FROM l4 ORDER BY n""".stripMargin) { (s, dir) =>
-    val e0 = weightedEdges(s, dir).persist(MEMORY_AND_DISK)
+    val e0 = Graph.coPurchaseEdges(s, dir).persist(MEMORY_AND_DISK)
     val day1 = e0.filter((col("u") + col("v")) % 5 =!= 0)
       .persist(MEMORY_AND_DISK)
     val delta = e0.filter((col("u") + col("v")) % 5 === 0)
@@ -1656,9 +1605,10 @@ object Round15 {
       day1.select(col("u").as("doc_a"), col("v").as("doc_b")))
       .select(col("doc_id").as("n"), col("cluster_id").as("lab"))
       .persist(MEMORY_AND_DISK)
-    val stored = wlpa4(day1)
+    val wlpa = Graph.lpa(_: DataFrame, sum(col("w")))
+    val stored = wlpa(day1)
     val (updated, _, _) = Round14.componentFold(labels, stored, day1, delta)(
-      wlpa4)
+      wlpa)
     updated.select(col("n"), col("lbl")).orderBy(col("n"))
   }
 

@@ -97,8 +97,8 @@ object Round15b {
       |ORDER BY CASE WHEN community = -1 THEN 0 ELSE 1 END,
       |         n_nodes DESC, community
       |LIMIT 21""".stripMargin) { (s, dir) =>
-    val e = Round15.weightedEdges(s, dir).persist(MEMORY_AND_DISK)
-    val l = Round15.wlpa4(e).persist(MEMORY_AND_DISK)
+    val e = Graph.coPurchaseEdges(s, dir).persist(MEMORY_AND_DISK)
+    val l = Graph.lpa(e, sum(col("w"))).persist(MEMORY_AND_DISK)
     val ww = e.agg(coalesce(sum(col("w")), lit(0L)).cast("long"))
       .head.getLong(0)
     if (ww == 0L)
@@ -207,8 +207,8 @@ object Round15b {
       |       i AS n, from_lbl, to_lbl, gain
       |FROM best WHERE gain > 0
       |ORDER BY pos LIMIT 30""".stripMargin) { (s, dir) =>
-    val e = Round15.weightedEdges(s, dir).persist(MEMORY_AND_DISK)
-    val l = Round15.wlpa4(e).persist(MEMORY_AND_DISK)
+    val e = Graph.coPurchaseEdges(s, dir).persist(MEMORY_AND_DISK)
+    val l = Graph.lpa(e, sum(col("w"))).persist(MEMORY_AND_DISK)
     val ww = e.agg(coalesce(sum(col("w")), lit(0L)).cast("long"))
       .head.getLong(0)
     if (ww == 0L)
@@ -329,14 +329,7 @@ object Round15b {
       |         AS is_seed
       |FROM tk LEFT JOIN sd ON sd.nd = tk.n
       |ORDER BY tk.pos""".stripMargin) { (s, dir) =>
-    val l = Tables(s, dir, "lineitem")
-      .select(col("l_orderkey"), col("l_partkey")).distinct()
-    val ew = l.as("l1").join(l.as("l2"),
-        col("l1.l_orderkey") === col("l2.l_orderkey") &&
-          col("l1.l_partkey") < col("l2.l_partkey"))
-      .groupBy(col("l1.l_partkey").as("u"), col("l2.l_partkey").as("v"))
-      .agg(count(lit(1)).as("w"))
-      .filter(col("w") >= 2)
+    val ew = Graph.coPurchaseEdges(s, dir)
     val sym = ew.unionAll(
       ew.select(col("v").as("u"), col("u").as("v"), col("w")))
     val swt = sym.groupBy(col("u")).agg(sum(col("w")).as("sw"))
@@ -1088,8 +1081,8 @@ object Round15b {
   private val SccMaxRounds = 40
   private val SccMaxPeels = 12
 
-  /** TIERED SCC (the q383/resolveClusters tier discipline): below
-    * [[SccDriverMaxEdges]] the edge list collects once and an iterative
+  /** TIERED SCC ([[Graph.tiered]]): below [[Graph.DriverMaxEdges]] the
+    * edge list collects once and an iterative
     * Tarjan runs on the driver — no per-round jobs at all; above it,
     * forward–backward min-label peeling runs distributed. Both tiers
     * produce scc_id = the component's minimum node id, and
@@ -1098,24 +1091,16 @@ object Round15b {
     * graph is ≤ 6k edges at every test SF, so the driver tier serves
     * the bench; at 100 TB the distributed peeler takes over exactly as
     * the CC closure does. */
-  private[graft] val SccDriverMaxEdges = 2000000L
-
   private[graft] def sccLabels(s: SparkSession, edges0: DataFrame,
-      driverMaxEdges: Long = SccDriverMaxEdges): DataFrame = {
-    // ONE bounded job decides the tier and fetches the driver tier's
-    // edges (see Fuzzy.resolveClusters); the persist moves to the
-    // distributed tier, the only consumer that re-reads the edges.
-    val cap = (math.min(driverMaxEdges, Int.MaxValue.toLong - 1) + 1).toInt
-    val probe = edges0.select(col("u"), col("v")).limit(cap).collect()
-    if (probe.length <= driverMaxEdges) {
-      val el = probe.map(r => (r.getLong(0), r.getLong(1)))
-      val labels = tarjanScc(el)
+      driverMaxEdges: Long = Graph.DriverMaxEdges): DataFrame =
+    // The persist sits in the distributed tier, the only consumer that
+    // re-reads the edges.
+    Graph.tiered(edges0, Seq("u", "v"), driverMaxEdges) { probe =>
+      val labels = tarjanScc(probe.map(r => (r.getLong(0), r.getLong(1))))
       import s.implicits._
-      return broadcast(labels.toSeq.toDF("n", "scc_id"))
-    }
-    sccDistributed(s,
-      edges0.select(col("u"), col("v")).persist(MEMORY_AND_DISK))
-  }
+      broadcast(labels.toSeq.toDF("n", "scc_id"))
+    }(sccDistributed(s,
+      edges0.select(col("u"), col("v")).persist(MEMORY_AND_DISK)))
 
   /** Iterative Tarjan (explicit stack — no recursion depth limits),
     * labels canonicalized to the component minimum. */
@@ -1338,12 +1323,11 @@ object Round15b {
     * it, iterated max-propagation to a verified fixpoint with the loud
     * round cap. Returns (c, d). */
   private[graft] def condensationDepth(s: SparkSession, compsIn: DataFrame,
-      ceIn: DataFrame, driverMaxEdges: Long = SccDriverMaxEdges)
-      : DataFrame = {
-    val nCe = ceIn.count()
-    if (nCe <= driverMaxEdges) {
+      ceIn: DataFrame, driverMaxEdges: Long = Graph.DriverMaxEdges)
+      : DataFrame =
+    Graph.tiered(ceIn, Seq("src", "dst"), driverMaxEdges) { probe =>
       val cs = compsIn.collect().map(_.getLong(0))
-      val el = ceIn.collect().map(r => (r.getLong(0), r.getLong(1)))
+      val el = probe.map(r => (r.getLong(0), r.getLong(1)))
       val preds = el.groupBy(_._2).view.mapValues(_.map(_._1)).toMap
       val depth = scala.collection.mutable.Map.empty[Long, Long]
       def dOf(c: Long): Long = depth.getOrElseUpdate(c, {
@@ -1362,29 +1346,29 @@ object Round15b {
         depth(c)
       })
       import s.implicits._
-      return broadcast(cs.toSeq.map(c => (c, dOf(c))).toDF("c", "d"))
+      broadcast(cs.toSeq.map(c => (c, dOf(c))).toDF("c", "d"))
+    } {
+      var dep = compsIn.select(col("c"), lit(0L).as("d")).localCheckpoint()
+      var changed = 1L
+      var r = 0
+      while (changed > 0) {
+        r += 1
+        require(r <= SccMaxRounds, s"condensation depth exceeded " +
+          s"$SccMaxRounds rounds — DAG depth drifted, re-measure")
+        val nxt = ceIn.join(dep, col("src") === col("c"))
+          .groupBy(col("dst")).agg(max(col("d") + 1).as("dn"))
+          .join(dep.select(col("c"), col("d").as("d0")),
+            col("dst") === col("c"), "right")
+          .select(col("c"), greatest(coalesce(col("dn"), col("d0")),
+            col("d0")).as("d"))
+          .localCheckpoint()
+        changed = nxt.join(dep.select(col("c").as("c0"), col("d").as("dp")),
+          col("c") === col("c0"))
+          .filter(col("d") =!= col("dp")).count()
+        dep = nxt
+      }
+      dep
     }
-    var dep = compsIn.select(col("c"), lit(0L).as("d")).localCheckpoint()
-    var changed = 1L
-    var r = 0
-    while (changed > 0) {
-      r += 1
-      require(r <= SccMaxRounds, s"condensation depth exceeded " +
-        s"$SccMaxRounds rounds — DAG depth drifted, re-measure")
-      val nxt = ceIn.join(dep, col("src") === col("c"))
-        .groupBy(col("dst")).agg(max(col("d") + 1).as("dn"))
-        .join(dep.select(col("c"), col("d").as("d0")),
-          col("dst") === col("c"), "right")
-        .select(col("c"), greatest(coalesce(col("dn"), col("d0")),
-          col("d0")).as("d"))
-        .localCheckpoint()
-      changed = nxt.join(dep.select(col("c").as("c0"), col("d").as("dp")),
-        col("c") === col("c0"))
-        .filter(col("d") =!= col("dp")).count()
-      dep = nxt
-    }
-    dep
-  }
 
   // -------------------------------------------------------------------
   // q450 — graph motif census (wedges / triangles / squares / K4)

@@ -2311,7 +2311,8 @@ object StreamGate {
           val delta = batch.toDF().select(col("u"), col("v"))
             .join(archive, Seq("u", "v"), "left_anti")
           val (updated, newLabels, _) = graft.ops.Round14.componentFold(
-            labels, lpa, archive, delta)(graft.ops.Round14.lpa4)
+            labels, lpa, archive, delta)(
+            graft.ops.Graph.lpa(_, count(lit(1))))
           updated.write.mode("overwrite").parquet(s"$store/lpalbl/gen=$id")
           newLabels.select(col("n"), col("lab"))
             .write.mode("overwrite").parquet(s"$store/labels/gen=$id")
@@ -2349,14 +2350,7 @@ object StreamGate {
     "q424_stream_msf_maintain",
     graft.ops.Round15.q420BoruvkaMsf.oracle.get) { (s, dir) =>
     val work = Files.createTempDirectory("graft-q424-")
-    val lp = Tables(s, dir, "lineitem")
-      .select(col("l_orderkey"), col("l_partkey")).distinct()
-    val e0 = lp.as("l1").join(lp.as("l2"),
-        col("l1.l_orderkey") === col("l2.l_orderkey") &&
-          col("l1.l_partkey") < col("l2.l_partkey"))
-      .groupBy(col("l1.l_partkey").as("u"), col("l2.l_partkey").as("v"))
-      .agg(count(lit(1)).as("w"))
-      .filter(col("w") >= 2)
+    val e0 = graft.ops.Graph.coPurchaseEdges(s, dir)
       // Persist before staging (q411's rationale): three batch writes
       // must not re-run the weighted co-purchase join three times.
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -2543,10 +2537,11 @@ object StreamGate {
     "q444_stream_community_maintain",
     graft.ops.Round15b.q436Modularity.oracle.get) { (s, dir) =>
     val work = Files.createTempDirectory("graft-q444-")
-    val e = graft.ops.Round15.weightedEdges(s, dir)
+    val e = graft.ops.Graph.coPurchaseEdges(s, dir)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val labelsPath = work.resolve("labels").toString
-    graft.ops.Round15.wlpa4(e).write.mode("overwrite").parquet(labelsPath)
+    graft.ops.Graph.lpa(e, sum(col("w")))
+      .write.mode("overwrite").parquet(labelsPath)
     val in = stageOrderedBatches(work,
       Seq(0, 1, 2).map(r => e.filter((col("u") + col("v")) % 3 === r)))
     val store = work.resolve("comm").toString

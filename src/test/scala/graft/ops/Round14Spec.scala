@@ -448,9 +448,9 @@ class Round14Spec extends SparkSpec {
     val labels = Fuzzy.resolveClusters(spark,
       day1.select(col("u").as("doc_a"), col("v").as("doc_b")))
       .select(col("doc_id").as("n"), col("cluster_id").as("lab"))
-    val stored = Round14.lpa4(day1)
+    val stored = Graph.lpa(day1, count(lit(1)))
     val (_, _, scanned) = Round14.componentFold(
-      labels, stored, day1, delta)(Round14.lpa4)
+      labels, stored, day1, delta)(Graph.lpa(_, count(lit(1))))
     val scannedSet = scanned.collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(scannedSet.forall { case (u, _) => u < 20L },

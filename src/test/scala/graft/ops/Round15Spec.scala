@@ -141,14 +141,14 @@ class Round15Spec extends SparkSpec {
       archiveDf.select(col("u").as("doc_a"), col("v").as("doc_b")))
       .select(col("doc_id").as("n"), col("cluster_id").as("lab"))
       .localCheckpoint()
-    val lpa = Round14.lpa4(archiveDf).localCheckpoint()
+    val lpa = Graph.lpa(archiveDf, count(lit(1))).localCheckpoint()
     // The stream's replay guard: a redelivered batch is already archived,
     // so the anti-join empties the delta before the fold ever runs.
     val redelivered = Seq((1L, 2L), (10L, 11L)).toDF("u", "v")
     val delta = redelivered.join(archiveDf, Seq("u", "v"), "left_anti")
     assert(delta.count() === 0L, "replay guard must empty the delta")
     val (updated, newLabels, scanned) = Round14.componentFold(
-      labels, lpa, archiveDf, delta)(Round14.lpa4)
+      labels, lpa, archiveDf, delta)(Graph.lpa(_, count(lit(1))))
     assert(scanned.count() === 0L,
       "an empty delta must touch no component — zero edges re-scanned")
     def pairs(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
@@ -594,10 +594,10 @@ class Round15Spec extends SparkSpec {
       (10L, 10L), (11L, 10L), (12L, 10L),
       (20L, 20L), (21L, 20L), (22L, 22L), (23L, 22L))
     val day1Df = day1.toDF("u", "v", "w")
-    val stored = Round15.wlpa4(day1Df)
+    val stored = Graph.lpa(day1Df, sum(col("w")))
     val (updated, _, touched) = Round14.componentFold(
       labels.toDF("n", "lab"), stored, day1Df,
-      delta.toDF("u", "v", "w"))(Round15.wlpa4)
+      delta.toDF("u", "v", "w"))(Graph.lpa(_, sum(col("w"))))
     val ref = refWeightedLpa(day1 ++ delta)
     assert(updated.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       === ref)

@@ -67,7 +67,7 @@ class Round15bSpec extends SparkSpec {
       (12L, 14L), (13L, 14L)).map { case (u, v) => (u, v, 3L) }
     val edges = k4a ++ k4b ++ Seq((4L, 11L, 2L))
     lineitemFor(edges, dir)
-    val labels = Round15.wlpa4(Round15.weightedEdges(spark, dir))
+    val labels = Graph.lpa(Graph.coPurchaseEdges(spark, dir), sum(col("w")))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val (qnumTotal, byComm) = refModularity(edges, labels)
     val ww = BigInt(edges.map(_._3).sum)
@@ -102,7 +102,7 @@ class Round15bSpec extends SparkSpec {
     val edges = k4a ++ triB ++ Seq((4L, 20L, 4L), (20L, 11L, 2L),
       (20L, 12L, 2L))
     lineitemFor(edges, dir)
-    val labels = Round15.wlpa4(Round15.weightedEdges(spark, dir))
+    val labels = Graph.lpa(Graph.coPurchaseEdges(spark, dir), sum(col("w")))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val (qnum0, _) = refModularity(edges, labels)
     // Brute force: every node × every neighboring community, gain by
